@@ -6,7 +6,7 @@ measurement. Prints exactly ONE JSON line:
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS  (default 32),
-     CRABSPARK_BENCH_PAGES (crawl fixture size, default 2000),
+     CRABSPARK_BENCH_PAGES (crawl fixture size, default 20000),
      CRABSPARK_BENCH_SKIP_CRAWL=1 to skip the crawl-round measurement.
 """
 
@@ -71,13 +71,18 @@ def _force(df) -> None:
 def bench_queries(spark, sf_dir: str) -> dict[str, float]:
     out: dict[str, float] = {}
     reg = Q.queries()
+    sc = spark.sparkContext
     for name in BENCH_QUERIES:
         fn = reg[name]
         df = fn(spark, sf_dir)
+        # job labels attribute each query's stages in the event log
+        sc.setJobDescription(f"{name}: warm")
         _force(df)  # warm: plan + code paths + file listing
+        sc.setJobDescription(f"{name}: timed")
         t0 = time.monotonic()
         _force(fn(spark, sf_dir))
         out[name] = round(time.monotonic() - t0, 3)
+    sc.setJobDescription(None)
     return out
 
 
@@ -273,8 +278,11 @@ def main() -> None:
         # reported, each with loadavg + /proc/pressure/cpu telemetry
         # bracketing it, so the artifact itself shows whether a slow leg
         # was the engine or the neighbourhood (VERDICT r4 item 1). If even
-        # the best leg spent >5% of its wall CPU-stalled, one extra leg
-        # runs — a cheap second chance at a quiet window.
+        # the best leg lost >5% of its wall to hypervisor steal, or its
+        # probe was inflated, one extra leg runs — a cheap second chance at
+        # a quiet window. PSI stall does not trigger it: the leg's own
+        # task slots plus Python workers oversubscribe a small box and read
+        # stall_share ~0.44 on a quiet 4-core host.
 
         def _one_leg() -> float:
             before = _env_snapshot()
@@ -292,7 +300,7 @@ def main() -> None:
         for _ in range(3):
             urls_per_sec = max(urls_per_sec, _one_leg())
         best = crawl_runs.index(min(crawl_runs))
-        # Probe inflation is the third trigger: a colocated VM stealing
+        # Probe inflation is the second trigger: a colocated VM stealing
         # memory bandwidth inflates the fixed kernel while PSI and steal
         # both read quiet (measured: back-to-back identical legs 29.4s vs
         # 56.8s at <2 load, steal ~1%). Quiet-box probe is ~105-145 ms.
@@ -301,10 +309,8 @@ def main() -> None:
             for k in ("probe_ms_before", "probe_ms_after")
         ]
         probes = [p for p in probes if p is not None]
-        if (
-            crawl_env[best].get("stall_share", 0.0) > 0.05
-            or crawl_env[best].get("steal_share", 0.0) > 0.05
-            or (probes and min(probes) > 200.0)
+        if crawl_env[best].get("steal_share", 0.0) > 0.05 or (
+            probes and min(probes) > 200.0
         ):
             urls_per_sec = max(urls_per_sec, _one_leg())
         qtimes["crawl_round_loop"] = min(crawl_runs)

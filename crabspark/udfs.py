@@ -1,10 +1,16 @@
-"""Pandas-UDF wrappers around the pure kernels — the engine's only Python
-execution surface (north rule: vectorized Arrow UDFs, no per-row Python).
+"""Pandas/Arrow-UDF wrappers around the pure kernels — the engine's only
+Python execution surface (north rule: vectorized Arrow UDFs, no per-row
+Python).
 
-Exactly four UDF families, per SURVEY.md §2.8: link extraction, text
-extraction, the resolve/validate/canonicalize chain (fused into ONE UDF so a
-candidate crosses the Arrow boundary once), and the per-round robots
-matcher (built against that round's broadcast host-rules)."""
+The engine builds exactly these five UDFs:
+
+- ``extract_page_udf``: fused text + link extraction over the page html;
+- ``trim_body_udf``: the stored-body trim (Arrow-native where available);
+- ``resolve_full_udf``: the resolve/validate/canonicalize/sha1 chain, fused
+  so a candidate link crosses the Arrow boundary once;
+- ``blocked_join_udf``: the robots matcher over candidates joined to their
+  host's robots.txt body;
+- ``image_name_udf``: the image-name column of the images table."""
 
 from __future__ import annotations
 
@@ -15,14 +21,6 @@ import pyarrow as pa
 from pyspark.sql import functions as F
 
 from crabspark import extract, robots, urlkit
-
-
-def extract_links_udf():
-    @F.pandas_udf("link_links array<string>, img_links array<string>")
-    def _extract(html: pd.Series) -> pd.DataFrame:
-        return extract.extract_links(html)
-
-    return _extract
 
 
 def extract_page_udf():
@@ -37,14 +35,6 @@ def extract_page_udf():
         return extract.extract_page(html)
 
     return _page
-
-
-def extract_text_udf():
-    @F.pandas_udf("string")
-    def _text(html: pd.Series) -> pd.Series:
-        return extract.extract_text(html)
-
-    return _text
 
 
 def resolve_full_udf(permitted: list[str], blacklist: list[str], free_crawl: bool):
@@ -74,17 +64,6 @@ def resolve_full_udf(permitted: list[str], blacklist: list[str], free_crawl: boo
     return _resolve
 
 
-def blocked_udf(host_rules: dict[str, robots.HostRules], respect_robots: bool):
-    """Per-round robots matcher over the broadcast {host: rules} map
-    (J4/E4; the reference's INMEMORY_CACHE equivalent)."""
-
-    @F.pandas_udf("boolean")
-    def _blocked(ser: pd.Series, host: pd.Series) -> pd.Series:
-        return robots.blocked_mask(ser, host, host_rules, respect_robots)
-
-    return _blocked
-
-
 def blocked_join_udf(user_agents: list[str], respect_robots: bool):
     """Executor-side robots matcher: candidates arrive already JOINED to
     their host's robots.txt body (candidates ⋈ robots on host), so no
@@ -92,7 +71,7 @@ def blocked_join_udf(user_agents: list[str], respect_robots: bool):
     touch 10^6+ hosts × multi-KB bodies. Rules are parsed once per distinct
     (host) within each Arrow batch (candidates of a host cluster into the
     same batches after the join); hosts with no robots row (null body) are
-    allowed, exactly like the driver-map path."""
+    allowed, exactly like the oracle's per-host rules map."""
     user_agents = list(user_agents)
 
     @F.pandas_udf("boolean")
@@ -335,10 +314,3 @@ def image_name_udf():
 
     return _name
 
-
-def canonicalize_udf():
-    @F.pandas_udf("string")
-    def _canon(url: pd.Series) -> pd.Series:
-        return urlkit.canonicalize(url)
-
-    return _canon

@@ -299,6 +299,19 @@ def surt_key(url: str) -> str:
     return ",".join(reversed(host.split("."))) + ")/" + (rest if sep else "")
 
 
+# CDX fields are space-separated: a url with a space would split into too
+# many fields and read_cdx would drop the whole record. '%' is escaped too,
+# so that a url already holding a literal '%20' decodes back unchanged.
+_CDX_ESCAPE = str.maketrans({"%": "%25", " ": "%20"})
+
+
+def _cdx_unescape(col):
+    """Inverse of ``_CDX_ESCAPE`` on a Spark column. Every '%' in an
+    escaped field starts an escape, so a '%20' match is always an escaped
+    space; decoding '%25' last keeps a restored '%' from starting one."""
+    return F.regexp_replace(F.regexp_replace(col, "%20", " "), "%25", "%")
+
+
 def _cdx_ts(ts) -> str:
     """CDX 14-digit timestamp (yyyymmddhhmmss)."""
     if pd.isna(ts):
@@ -325,7 +338,8 @@ def _write_archive_with_cdx(
     for url, cts, rec in records:
         blob = gzip.compress(rec) if gzip_out else rec
         cdx_lines.append(
-            f"{surt_key(url)} {cts} {url} {name} {offset} {len(blob)}"
+            f"{surt_key(url).translate(_CDX_ESCAPE)} {cts} "
+            f"{url.translate(_CDX_ESCAPE)} {name} {offset} {len(blob)}"
         )
         offset += len(blob)
         blobs.append(blob)
@@ -460,9 +474,9 @@ def read_cdx(spark: SparkSession, path: str) -> DataFrame:
         lines.filter(~F.col("value").startswith("CDX "))
         .filter(F.size(parts) == 6)
         .select(
-            parts[0].alias("urlkey"),
+            _cdx_unescape(parts[0]).alias("urlkey"),
             parts[1].alias("cdx_ts"),
-            parts[2].alias("url"),
+            _cdx_unescape(parts[2]).alias("url"),
             parts[3].alias("file"),
             parts[4].cast("long").alias("offset"),
             parts[5].cast("long").alias("length"),

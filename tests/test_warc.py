@@ -220,9 +220,9 @@ def test_wet_roundtrip_text_byte_identical(spark, tmp_path):
 
 
 def test_parse_warc_never_raises_on_arbitrary_bytes():
-    """Same never-raise contract as the multimodal codecs: arbitrary or
-    hostile bytes must yield a (possibly empty) record list, not an
-    exception — a 100-TB ingest cannot die on one corrupt archive."""
+    """Never-raise contract: arbitrary or hostile bytes must yield a
+    (possibly empty) record list, not an exception — a 100-TB ingest
+    cannot die on one corrupt archive."""
     from hypothesis import given, settings, strategies as st
 
     @given(st.binary(max_size=2048))
@@ -328,23 +328,27 @@ def test_write_warc_per_record_gzip_members(spark, tmp_path):
 
 def test_cdx_index_roundtrip_fetch_by_offset(spark, tmp_path):
     """read_warc + CDX -> fetch ONE record by (file, offset, length)
-    without scanning the archive — the random access a CDX exists for."""
+    without scanning the archive — the random access a CDX exists for.
+    A url with a space (CDX fields are space-separated) or a literal
+    '%20' must come back unchanged, not be dropped or decoded."""
     from crabspark.warc import fetch_record, read_cdx, surt_key
 
     urls = [f"http://www.h{i}.example/p/{i}?q=1" for i in range(8)]
+    urls += ["http://www.h8.example/p/8?q=a b", "http://www.h9.example/p/9?q=a%20b"]
+    n = len(urls)
     pdf = pd.DataFrame(
         {
             "url": urls,
-            "warc_ts": pd.to_datetime(["2024-05-01T12:00:%02d" % i for i in range(8)]),
-            "html": [f"<html>page {i}</html>".encode() for i in range(8)],
-            "text": ["x"] * 8,
-            "lang": [None] * 8,
+            "warc_ts": pd.to_datetime(["2024-05-01T12:00:%02d" % i for i in range(n)]),
+            "html": [f"<html>page {i}</html>".encode() for i in range(n)],
+            "text": ["x"] * n,
+            "lang": [None] * n,
         }
     )
     out = str(tmp_path / "warcs")
     write_warc(spark.createDataFrame(pdf).repartition(2), out)
     idx = read_cdx(spark, out).collect()
-    assert len(idx) == 8
+    assert len(idx) == n
     assert {r.url for r in idx} == set(urls)
     for r in idx:
         assert r.urlkey == surt_key(r.url)

@@ -52,7 +52,7 @@ def test_installed_wheel_imports_outside_repo(wheel_venv):
             "import sys;"
             "sys.path = [p for p in sys.path if p not in ('', '/root/repo')];"
             "import crabspark, crabspark.queries, crabspark.engine,"
-            " crabspark.warc, crabspark.graph, crabspark.multimodal;"
+            " crabspark.warc, crabspark.graph;"
             "print(crabspark.__version__, crabspark.__file__)",
         ],
         cwd="/tmp",
