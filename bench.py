@@ -2,7 +2,13 @@
 measurement. Prints exactly ONE JSON line:
 
   {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <sf>, "urls_per_sec": <crawl tput>}
+   "queries": {name: sec, ...}, "sf": <sf>, "urls_per_sec": <crawl tput>,
+   "crawl_runs": [leg wall, ...], "crawl_env": [...],
+   "crawl_breakdown": [{"select_s", "pipeline_s", "write_s",
+                        "py_worker_cpu_s"}, ...]}
+
+Each crawl leg's breakdown sums Engine.phase_splits over the measured
+crawl's rounds and adds the CPU seconds its Spark Python workers used.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS  (default 32),
@@ -86,10 +92,44 @@ def bench_queries(spark, sf_dir: str) -> dict[str, float]:
     return out
 
 
-def bench_crawl(spark, n_pages: int) -> tuple[float, float]:
-    """Throughput-mode crawl over the synthetic web; returns
-    (urls_per_sec, crawl_wall_sec). The fixture is generated once and
-    cached under .bench_data/ (gitignored)."""
+def python_worker_cpu_s() -> float:
+    """CPU seconds used so far by this process's Spark Python workers:
+    utime+stime+cutime+cstime of every descendant running pyspark.daemon
+    (the daemon and the workers it forks share its command line). Exited
+    workers are reaped by the daemon, so their time moves into its cutime
+    and cstime; the sum only grows while the daemon lives."""
+    stats: dict[int, tuple[int, int]] = {}  # pid -> (ppid, clock ticks)
+    for d in os.listdir("/proc"):
+        if not d.isdigit():
+            continue
+        try:
+            with open(f"/proc/{d}/stat") as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+            stats[int(d)] = (int(fields[1]), sum(map(int, fields[11:15])))
+        except (OSError, ValueError, IndexError):
+            continue
+    children: dict[int, list[int]] = {}
+    for pid, (ppid, _) in stats.items():
+        children.setdefault(ppid, []).append(pid)
+    ticks, todo = 0, list(children.get(os.getpid(), []))
+    while todo:
+        pid = todo.pop()
+        todo.extend(children.get(pid, []))
+        try:
+            with open(f"/proc/{pid}/cmdline", "rb") as f:
+                is_worker = b"pyspark.daemon" in f.read()
+        except OSError:
+            continue
+        if is_worker:
+            ticks += stats[pid][1]
+    return ticks / os.sysconf("SC_CLK_TCK")
+
+
+def bench_crawl(spark, n_pages: int) -> dict:
+    """Throughput-mode crawl over the synthetic web; returns the crawl's
+    wall seconds, URLs/s, per-phase second sums and Python-worker CPU
+    seconds. The fixture is generated once and cached under .bench_data/
+    (gitignored)."""
     from crabspark.config import Config
     from crabspark.engine import Engine
     from fixtures import gen_pages
@@ -130,10 +170,21 @@ def bench_crawl(spark, n_pages: int) -> tuple[float, float]:
             pages_path=os.path.join(fxdir, "pages.parquet"),
             robots_path=os.path.join(fxdir, "robots.parquet"),
         )
+        cpu0 = python_worker_cpu_s()
         t0 = time.monotonic()
         res = eng.run()
         wall = time.monotonic() - t0
-        return res["visited"] / wall, wall
+        cpu = python_worker_cpu_s() - cpu0
+        phases = {
+            k: round(sum(p[k] for p in eng.phase_splits), 3)
+            for k in ("select_s", "pipeline_s", "write_s")
+        }
+        return {
+            "wall": round(wall, 3),
+            "ups": round(res["visited"] / wall, 2),
+            **phases,
+            "py_worker_cpu_s": round(cpu, 2),
+        }
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -240,8 +291,7 @@ def crawl_leg_main() -> None:
     n_pages = int(os.environ.get("CRABSPARK_BENCH_PAGES", "20000"))
     spark = get_spark(cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    ups, wall = bench_crawl(spark, n_pages)
-    print(json.dumps({"wall": round(wall, 3), "ups": round(ups, 2)}))
+    print(json.dumps(bench_crawl(spark, n_pages)))
 
 
 def main() -> None:
@@ -256,6 +306,7 @@ def main() -> None:
     urls_per_sec = 0.0
     crawl_runs: list[float] = []
     crawl_env: list[dict] = []
+    crawl_breakdown: list[dict] = []
     if os.environ.get("CRABSPARK_BENCH_SKIP_CRAWL") != "1":
         import subprocess
 
@@ -295,6 +346,10 @@ def main() -> None:
             leg = json.loads(line)
             crawl_runs.append(leg["wall"])
             crawl_env.append(_leg_env(before, after, leg["wall"]))
+            crawl_breakdown.append({
+                k: leg[k] for k in
+                ("select_s", "pipeline_s", "write_s", "py_worker_cpu_s")
+            })
             return leg["ups"]
 
         for _ in range(3):
@@ -327,6 +382,7 @@ def main() -> None:
                 "urls_per_sec": round(urls_per_sec, 2),
                 "crawl_runs": crawl_runs,
                 "crawl_env": crawl_env,
+                "crawl_breakdown": crawl_breakdown,
                 "cpus": cpus,
             }
         )

@@ -19,6 +19,14 @@ tables    snapshot/delta table layer (Iceberg-style, parquet fallback)
 seen      sharded URL-seen set: bloom prefilter + exact anti-join
 frontier  priority encoding, per-host politeness rank, cap trim
 engine    the round loop: visit, fetch-join, extract, filter, commit
+shipping  ship the package to Python workers; worker-side zipimport guard
 """
 
+from crabspark.shipping import install_worker_zip_guard as _install_guard
+
 __version__ = "0.1.0"
+
+# A Spark Python worker imports crabspark when it unpickles a crabspark UDF;
+# from then on its per-task importlib.invalidate_caches() stops re-reading
+# every zip archive on sys.path (see crabspark.shipping).
+_install_guard()

@@ -105,14 +105,6 @@ class Config:
     salt_buckets: int = 8  # salt fan-out for host-skew mitigation
     bloom_capacity: int = 1_000_000  # expected seen-set size per bloom epoch
     bloom_fpp: float = 0.01
-    # seen-set prefilter backend (north rule: "bloom/cuckoo URL-seen").
-    # 'bloom': fixed-size OR-mergeable bitmap (default). 'cuckoo': 4-slot
-    # 16-bit-fingerprint cuckoo filter — supports DELETES (re-crawl
-    # eviction) and 2-probe lookups; degrades to route-everything-exact
-    # (never false-drops) if it saturates. Both are routing-only: a miss
-    # skips the anti-join, a hit takes the exact path, so crawl output is
-    # byte-identical across backends (test-pinned).
-    seen_filter: str = "bloom"
     # fetch join strategy: 'auto' broadcasts the round batch into the pages
     # scan only while it fits (<= fetch_broadcast_limit rows), else falls
     # back to a shuffle-hash join (batch side builds) — a 10^8-row batch
@@ -155,11 +147,6 @@ class Config:
             raise ValueError(
                 f"scheduling must be one of dfs-parity/throughput, "
                 f"got {self.scheduling!r}"
-            )
-        if self.seen_filter not in ("bloom", "cuckoo"):
-            raise ValueError(
-                f"seen_filter must be one of bloom/cuckoo, "
-                f"got {self.seen_filter!r}"
             )
 
     @classmethod

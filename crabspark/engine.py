@@ -34,8 +34,12 @@ Scale design notes (10^10 frontier):
   shuffle-free — the read itself is irreducible for global scheduling;
 - the cap trim is a range-partitioned exact top-k (per-partition counts +
   boundary-partition rank), never a single-partition global sort;
-- work stages repartition by url_sha1 (uniform) so mega-host batches spread
-  over all executors; politeness quota bounds any host's share per round;
+- the work stages are not repartitioned: a broadcast fetch join runs the
+  Python stage inside the pages scan, so its parallelism is the scan's
+  split count whatever the batch's host skew (one task on the 2000-page
+  test fixture); a shuffle-hash fetch join spreads by url hash instead. A
+  url_sha1 repartition of the work stages was tried and was not
+  faster. The politeness quota bounds any host's share per round;
 - every count the loop needs is computed in one aggregate job per round.
 
 Resume: the catalog manifest names the last committed round; an interrupted
@@ -51,6 +55,7 @@ from __future__ import annotations
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -59,7 +64,7 @@ from pyspark.sql import functions as F
 from crabspark import frontier as frontier_mod
 from crabspark import udfs, urlkit
 from crabspark.config import Config
-from crabspark.seen import filter_unseen, load_seen_filter, make_seen_filter
+from crabspark.seen import Bloom, filter_unseen
 from crabspark.tables import Catalog
 
 FRONTIER_SCHEMA = (
@@ -68,6 +73,20 @@ FRONTIER_SCHEMA = (
 )
 OPS_SCHEMA = "url string, referrer string, round int, priority string, op string"
 EDGES_SCHEMA = "parent string, parent_round int, child string"
+
+
+@contextmanager
+def job_label(spark: SparkSession, label: str):
+    """Label the Spark jobs this thread submits (the event log's job
+    description), restoring the thread's previous label on exit. Local
+    properties are per thread: pooled tasks must set their own."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(prev)
 
 
 class Engine:
@@ -132,7 +151,16 @@ class Engine:
                 self.bucketed_frontier = BucketedFrontier(
                     self.catalog, int(nb)
                 )
-        self.pages = spark.read.parquet(pages_path)
+        with job_label(spark, "init"):  # parquet schema discovery
+            self.pages = spark.read.parquet(pages_path)
+            self.robots_df = (
+                spark.read.parquet(robots_path) if robots_path else None
+            )
+            # image-fetch responses (url, content_type, bytes); when absent
+            # the engine falls back to presence-in-pages success semantics
+            self.assets = (
+                spark.read.parquet(assets_path) if assets_path else None
+            )
         # url-hash-bucketed pages layout (tables.bucketize_pages): the
         # fetch join prunes the scan to the batch's bucket partitions
         self.pages_buckets: int | None = None
@@ -145,12 +173,6 @@ class Engine:
                 self.pages_buckets = int(_json.load(f)["n_buckets"])
         except (OSError, ValueError, KeyError, TypeError):
             self.pages_buckets = None
-        self.robots_df = (
-            spark.read.parquet(robots_path) if robots_path else None
-        )
-        # image-fetch responses (url, content_type, bytes); when absent the
-        # engine falls back to presence-in-pages success semantics
-        self.assets = spark.read.parquet(assets_path) if assets_path else None
         self._extract_page = udfs.extract_page_udf()
         self._trim_body = udfs.trim_body_udf()
         self._resolve = udfs.resolve_full_udf(
@@ -189,27 +211,28 @@ class Engine:
         self.fold_skips_total = 0  # observability (tests/metrics)
         bloom_path = self.catalog.extra("bloom")
         if bloom_path and os.path.exists(bloom_path) and not fresh_seen:
-            # sniffs bloom vs cuckoo from the snapshot itself (resume-proof
-            # against a seen_filter config change)
-            self.bloom = load_seen_filter(bloom_path, cfg)
+            self.bloom = Bloom.load(
+                bloom_path, cfg.bloom_capacity, cfg.bloom_fpp
+            )
         else:
-            self.bloom = make_seen_filter(cfg)
+            self.bloom = Bloom(cfg.bloom_capacity, cfg.bloom_fpp)
         if fresh_seen and self.catalog.committed_round >= 0:
             # reference process restart: seen set was in-memory and is lost;
             # visited/is_complete persists and gates re-crawl (Q5).
-            self.catalog.overwrite(
-                "seen", self._empty("url string, sha1 string, round int"),
-                self.round,
-            )
-            self.total_visited = 0
-            self._init_frontier()
-            self.catalog.commit(
-                self.round - 1,
-                {"total_visited": 0, "frontier_size": self.frontier_size,
-                 "queued_seeds": sorted(self._queued_seeds),
-                 "frontier_folded_round": self.round - 1,
-                 "frontier_seeded": True, "visited_at_fold": 0},
-            )
+            with job_label(spark, "init"):
+                self.catalog.overwrite(
+                    "seen", self._empty("url string, sha1 string, round int"),
+                    self.round,
+                )
+                self.total_visited = 0
+                self._init_frontier()
+                self.catalog.commit(
+                    self.round - 1,
+                    {"total_visited": 0, "frontier_size": self.frontier_size,
+                     "queued_seeds": sorted(self._queued_seeds),
+                     "frontier_folded_round": self.round - 1,
+                     "frontier_seeded": True, "visited_at_fold": 0},
+                )
 
     # ------------------------------------------------------------------
     def _debug_log(self, msg: str) -> None:
@@ -349,15 +372,16 @@ class Engine:
             else self.catalog.exists("frontier")
         )
         if not frontier_exists:
-            self._init_frontier()
-            self.catalog.commit(
-                self.round - 1,
-                {"total_visited": self.total_visited,
-                 "frontier_size": self.frontier_size,
-                 "queued_seeds": sorted(self._queued_seeds),
-                 "frontier_seeded": True,
-                 "visited_at_fold": self.total_visited},
-            )
+            with job_label(self.spark, "init"):
+                self._init_frontier()
+                self.catalog.commit(
+                    self.round - 1,
+                    {"total_visited": self.total_visited,
+                     "frontier_size": self.frontier_size,
+                     "queued_seeds": sorted(self._queued_seeds),
+                     "frontier_seeded": True,
+                     "visited_at_fold": self.total_visited},
+                )
         started = time.monotonic()
         rounds_done = 0
         timed_out = False
@@ -389,7 +413,14 @@ class Engine:
 
     # ------------------------------------------------------------------
     def _round(self) -> bool:
+        """One round; its jobs are labelled "round <r>: <phase>" for the
+        select, pipeline, write and post-commit phases."""
+        with job_label(self.spark, f"round {self.round}: select"):
+            return self._round_phases()
+
+    def _round_phases(self) -> bool:
         r = self.round
+        sc = self.spark.sparkContext
         t0 = time.monotonic()
         cfg = self.cfg
         # the driver's frontier-size estimate is provably >= the true live
@@ -492,6 +523,7 @@ class Engine:
             )
             return False
         t_batch = time.monotonic()
+        sc.setJobDescription(f"round {r}: pipeline")
 
         # --- visit rows (upsert log): the DFS priority string IS the
         # within-round order key, so no global row_number sort is needed;
@@ -768,6 +800,7 @@ class Engine:
                 {int(b) for row in part_stats for b in (row["img_buckets"] or [])}
             )
         t_judged = time.monotonic()
+        sc.setJobDescription(f"round {r}: write")
 
         # --- seen deltas: every observed survivor enters seen (Q6) ---
         new_seen = judged.select(
@@ -952,9 +985,13 @@ class Engine:
         # must drop ALL staged deltas (not just the failing task's own) or a
         # later commit on this Catalog would publish a half-round, breaking
         # the atomic-round invariant that crash recovery relies on.
+        def _labelled(task):
+            with job_label(self.spark, f"round {r}: write"):
+                task()
+
         try:
             with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
-                futures = [pool.submit(t) for t in tasks]
+                futures = [pool.submit(_labelled, t) for t in tasks]
                 # metrics rows are O(partitions) driver-local data: stage
                 # them as pyarrow parquet with ZERO Spark jobs (a Spark
                 # write job for 40 rows is pure fixed floor)
@@ -1006,6 +1043,7 @@ class Engine:
             f" / write+commit {time.monotonic() - t_judged:.1f}, "
             f"jobs {self._job_counter() - jobs0})"
         )
+        sc.setJobDescription(f"round {r}: post-commit")
         # auto-migrate to the host-bucketed layout once the frontier is big
         # enough that the politeness-rank shuffle dominates (the committed
         # extra makes the migration sticky across resumes)
@@ -1297,6 +1335,10 @@ class Engine:
         """Completion propagation (A4, quirks Q4/Q5/Q10): iterative
         bad-call fixpoint over the per-visit edge tree, bounded by crawl
         depth. All joins are O(visited), never O(frontier)."""
+        with job_label(self.spark, "finalize"):
+            self._propagate_completion()
+
+    def _propagate_completion(self) -> None:
         ops = self.catalog.read("visited_ops")
         if ops is None:
             return

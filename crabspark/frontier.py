@@ -14,9 +14,10 @@ work-stealing (src/crawl.rs:94-102) with a per-thread politeness sleep
   ``per_host_quota`` URLs per round (politeness: one quota unit per
   delay-tick), then a global ascending-priority trim enforces the remaining
   visit cap deterministically.
-- **skew**: ranking partitions by host; the subsequent fetch/extract stages
-  repartition by url_sha1 (uniform) so a mega-host's batch spreads across
-  all executors regardless of host skew.
+- **skew**: ranking partitions by host, with a salted pre-rank for
+  mega-hosts. The fetch/extract stages downstream are not repartitioned:
+  they run in the pages scan's splits (see crabspark/engine.py), so a
+  skewed batch does not pile its Python work onto one task.
 """
 
 from __future__ import annotations

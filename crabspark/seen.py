@@ -148,6 +148,15 @@ class Bloom:
     @classmethod
     def load(cls, path: str, capacity: int, fpp: float) -> "Bloom":
         with np.load(path) as z:
+            if "bits" not in z.files:
+                # the cuckoo-filter backend (removed) saved a "kind" entry
+                # and no bits; its stores cannot resume on this version
+                raise ValueError(
+                    f"{path} is not a bloom snapshot (holds "
+                    f"{sorted(z.files)}): a store written with the removed "
+                    "cuckoo seen filter cannot resume; open it with "
+                    "fresh_seen=True (drops the seen set) or start a new store"
+                )
             bits = z["bits"]
             m, k = int(z["m"]), int(z["k"])
         b = cls(capacity, fpp, bits=bits)
@@ -158,7 +167,7 @@ class Bloom:
 def filter_unseen(
     candidates: DataFrame,
     seen_df: DataFrame | None,
-    bloom,  # Bloom | CuckooFilter | None — anything with might_contain()
+    bloom: Bloom | None,
     sha1_col: str = "url_sha1",
     cand_key: str = "url",
     seen_key: str = "url",
@@ -197,30 +206,3 @@ def filter_unseen(
     survivors = maybe_seen.join(seen_keys, on=cand_key, how="left_anti")
     return definitely_new.unionByName(survivors)
 
-
-# --- prefilter backend dispatch (north rule: "bloom/cuckoo URL-seen") ------
-
-def make_seen_filter(cfg):
-    """Fresh prefilter per Config.seen_filter. Both backends share the
-    routing contract (miss = definitely new, hit = exact path), so crawl
-    output is identical across them; they trade merge model (bloom:
-    OR-anything vs cuckoo: same-geometry re-insert) against deletability
-    and probe count."""
-    if getattr(cfg, "seen_filter", "bloom") == "cuckoo":
-        from crabspark.cuckoo import CuckooFilter
-
-        return CuckooFilter(cfg.bloom_capacity)
-    return Bloom(cfg.bloom_capacity, cfg.bloom_fpp)
-
-
-def load_seen_filter(path: str, cfg):
-    """Resume-proof loader: sniffs the snapshot kind from the file (a
-    resume may carry a different seen_filter than the run that wrote the
-    snapshot — the FILE wins, same rule as Bloom's saved geometry)."""
-    with np.load(path, allow_pickle=False) as z:
-        is_cuckoo = "kind" in z.files
-    if is_cuckoo:
-        from crabspark.cuckoo import CuckooFilter
-
-        return CuckooFilter.load(path, cfg.bloom_capacity)
-    return Bloom.load(path, cfg.bloom_capacity, cfg.bloom_fpp)

@@ -1,9 +1,11 @@
 """Bloom prefilter unit tests (numpy-only — no Spark session)."""
 
 import hashlib
+import os
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from crabspark.seen import Bloom, _params
 
@@ -109,3 +111,14 @@ def test_scatter_hybrid_paths_bit_identical():
         chunked.add_array(chunk)
     assert (whole.bits == chunked.bits).all()
     assert whole.might_contain(pd.Series(keys[:1000])).all()
+
+
+def test_cuckoo_snapshot_fails_clearly(tmp_path):
+    """Stores written by the removed cuckoo backend hold a "kind" entry and
+    no bits; resuming one must say so instead of raising KeyError."""
+    path = str(tmp_path / "bloom-000003.npy")
+    np.savez(path + ".tmp", kind=np.array(["cuckoo"]),
+             table=np.zeros((4, 4), dtype=np.uint16), nb=np.int64(4))
+    os.replace(path + ".tmp.npz", path)
+    with pytest.raises(ValueError, match="cuckoo"):
+        Bloom.load(path, capacity=1_000, fpp=0.01)
