@@ -1,6 +1,8 @@
 """Config-matrix parity (FIXTURES.md §4): allowlist-only vs free_crawl,
 robots on/off — engine vs oracle on the same fixture."""
 
+import os
+
 import pytest
 
 from crabspark.config import Config
@@ -161,3 +163,44 @@ def test_bucketed_pages_fetch_join(spark, fixture_paths, tmp_path):
         assert vis[url]["is_complete"] == row["is_complete"], url
     seen = {r["url"] for r in eng.read_seen().collect()}
     assert seen == golden.seen
+
+
+def test_cuckoo_seen_filter_identical_output(spark, fixture_paths, tmp_path):
+    """The cuckoo seen-filter backend is gone. A store whose seen-filter
+    snapshot it wrote (a "kind" entry, no bits) must refuse to resume with
+    a ValueError naming the cause, not a KeyError, and leave the crawl's
+    output identical; the way out the message names (fresh_seen=True)
+    must open the store."""
+    import numpy as np
+
+    from crabspark.seen import Bloom
+
+    cfg = cfg_with(free_crawl=True)
+    data = gen_pages.generate(n_pages=N_PAGES, seed=42)
+    golden = run_oracle(data["pages"], data["robots"], cfg)
+    store = str(tmp_path / "cuckoo_seen")
+    paths = dict(
+        pages_path=f"{fixture_paths}/pages.parquet",
+        robots_path=f"{fixture_paths}/robots.parquet",
+    )
+    eng = Engine(spark, cfg, store, **paths)
+    eng.run()
+    snap = eng.catalog.extra("bloom")
+    assert snap
+    # the removed backend's snapshot layout, written over the bloom's
+    np.savez(snap + ".tmp", kind=np.array(["cuckoo"]),
+             table=np.zeros((1024, 4), dtype=np.uint16), nb=np.int64(1024),
+             saturated=np.int64(0), n_inserted=np.int64(0),
+             n_deleted=np.int64(0))
+    os.replace(snap + ".tmp.npz", snap)
+    with pytest.raises(ValueError, match="cuckoo"):
+        Engine(spark, cfg, store, **paths)
+    vis = {r["url"]: r for r in eng.read_visited().collect()}
+    assert set(vis) == set(golden.visited)
+    for url, row in golden.visited.items():
+        assert vis[url]["is_blocked"] == row["is_blocked"], url
+        assert vis[url]["is_complete"] == row["is_complete"], url
+    seen = {r["url"] for r in eng.read_seen().collect()}
+    assert seen == golden.seen
+    eng2 = Engine(spark, cfg, store, fresh_seen=True, **paths)
+    assert isinstance(eng2.bloom, Bloom)

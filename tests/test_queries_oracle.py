@@ -2,6 +2,8 @@
 oracle_sql() on the same parquet tables (row count + schema-width + exact
 value equality after column-name sort), mimicking CORRECTNESS_r{N}.json."""
 
+import uuid
+
 import duckdb
 import pandas as pd
 import pytest
@@ -429,18 +431,30 @@ def test_tfidf_n_docs_is_broadcast_not_collected(spark):
     count() action at plan-build time. Job accounting is measured
     AGAINST A CONTROL build in the same session (the first parquet read
     of a session runs one environmental schema job either way; a count()
-    would add a full-scan job on top)."""
-    tracker = spark.sparkContext.statusTracker()
+    would add a full-scan job on top).
 
-    def jobs():
-        return len(tracker.getJobIdsForGroup(None) or [])
+    Each build runs under its own job group and is counted after the
+    listener bus drains: a delta of the session-wide job list breaks once
+    the shared session passes spark.ui.retainedJobs (1000), because the
+    status store then drops its oldest jobs 100 at a time."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    tag = uuid.uuid4().hex
 
-    a = jobs()
-    Q.REGISTRY["shard_manifest"][0](spark, SF_DIR)  # control: no count()
-    control = jobs() - a
-    b = jobs()
-    df = Q.REGISTRY["tfidf_top_terms"][0](spark, SF_DIR)
-    assert jobs() - b <= control, (
+    def jobs_of(name):
+        group = f"{name}-{tag}"
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            df = Q.REGISTRY[name][0](spark, SF_DIR)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return df, len(tracker.getJobIdsForGroup(group) or [])
+
+    _, control = jobs_of("shard_manifest")  # control: no count()
+    df, built = jobs_of("tfidf_top_terms")
+    assert built <= control, (
         "tfidf plan build ran more jobs than the control build "
         "(driver-side count()?)"
     )
