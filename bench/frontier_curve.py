@@ -10,7 +10,7 @@ only by the periodic fold).
 Usage:
   python bench/frontier_curve.py [--pages 120000] [--rounds 12] [--cpus 16]
 
-Appends a markdown section + JSON line to BENCH/frontier_curve.md.
+Writes a markdown section + JSON line to BENCH/frontier_curve.md.
 """
 
 from __future__ import annotations
@@ -32,8 +32,6 @@ def main() -> None:
     ap.add_argument("--rounds", type=int, default=12)
     ap.add_argument("--cpus", type=int, default=16)
     ap.add_argument("--quota", type=int, default=40)
-    ap.add_argument("--frontier-buckets", type=int, default=0,
-                    help="host-bucketed frontier layout (scale path)")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -70,7 +68,6 @@ def main() -> None:
     cfg.max_urls_to_visit = args.pages * 2   # cap never binds
     cfg.respect_robots = True
     cfg.collect_images = False
-    cfg.frontier_buckets = args.frontier_buckets
 
     work = tempfile.mkdtemp(prefix="crabspark-curve-")
     try:
@@ -119,19 +116,17 @@ def main() -> None:
         "cpus": args.cpus,
         "pages": args.pages,
         "quota": args.quota,
-        "frontier_buckets": args.frontier_buckets,
     }
 
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     out = os.path.join(REPO, "BENCH", "frontier_curve.md")
-    with open(out, "a" if args.frontier_buckets else "w") as f:
+    with open(out, "w") as f:
         f.write("# Frontier-growth curve (adds-only frontier)\n\n")
         f.write(
             "Per-round wall time vs frontier size: the round cost must track\n"
             "O(batch + children), not O(frontier). Fixture: wide fan-out\n"
             f"(branching=4), {args.pages} pages, per_host_quota={args.quota}, "
-            f"local[{args.cpus}], frontier layout: "
-            f"{'host-bucketed (' + str(args.frontier_buckets) + ' buckets, shuffle-free rank)' if args.frontier_buckets else 'delta-chain'}.\n\n"
+            f"local[{args.cpus}].\n\n"
         )
         f.write("| round | batch | children | frontier_size | wall_s |\n")
         f.write("|---|---|---|---|---|\n")

@@ -66,7 +66,6 @@ def main() -> None:
     ap.add_argument("--pages", type=int, default=2_000_000)
     ap.add_argument("--cpus", type=int, default=32)
     ap.add_argument("--branching", type=int, default=24)
-    ap.add_argument("--frontier-buckets", type=int, default=64)
     ap.add_argument("--exec-mode", default="local",
                     choices=["local", "cluster"],
                     help="'cluster' = local-cluster[cpus/4,4,4096]: separate "
@@ -137,7 +136,6 @@ def main() -> None:
     cfg.respect_robots = True
     cfg.collect_images = False
     cfg.bloom_capacity = 3 * args.pages
-    cfg.frontier_buckets = args.frontier_buckets
 
     work = tempfile.mkdtemp(prefix="crabspark-growth-")
     rows = []
@@ -162,11 +160,9 @@ def main() -> None:
             )
             sizes = {
                 t: _du(os.path.join(work, t))
-                for t in ("visited_ops", "seen", "fetched", "edges")
+                for t in ("visited_ops", "seen", "fetched", "edges",
+                          "frontier")
             }
-            sizes["frontier"] = _du(
-                os.path.join(work, "frontier_bucketed")
-            ) or _du(os.path.join(work, "frontier"))
             rows.append(
                 {
                     "round": m["round"], "batch_n": m["batch_n"],

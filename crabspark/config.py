@@ -9,7 +9,11 @@ defaults entirely).
 Rebuild-only fields extend the reference for the distributed engine:
 ``scheduling`` ('dfs-parity' reproduces the sequential reference order,
 'throughput' is the benchmarked BSP mode), ``max_depth``, ``per_host_quota``,
-``salt_buckets``, ``seeds`` (the reference has a single starting_url).
+``salt_buckets``, ``seeds`` (the reference has a single starting_url), the
+bloom sizing, the fetch-join strategy, the frontier fold period and the
+Arrow batch size. The frontier has one layout (the adds-only delta chain),
+so no field picks one; a config file that still sets a removed
+frontier-layout key loads with it ignored, like any unknown key.
 """
 
 from __future__ import annotations
@@ -114,20 +118,6 @@ class Config:
     # fold the adds-only frontier (physically drop visited rows) once the
     # delta chain grows past this many files — amortized O(live) rewrite
     frontier_fold_deltas: int = 16
-    # > 0 stores the frontier as a host-bucketed Spark table (CLUSTERED BY
-    # host SORTED BY host, priority): the politeness rank then runs with NO
-    # shuffle Exchange — the scan reports hash-partitioning on host. The
-    # scale path for 10^10-row frontiers; 0 keeps the plain delta-chain
-    # layout (any Spark session, no session-catalog tables).
-    frontier_buckets: int = 0
-    # auto-migration to the bucketed layout: when frontier_buckets == 0 and
-    # the driver's frontier-size estimate crosses the threshold mid-crawl,
-    # the engine folds the delta-chain frontier into a host-bucketed table
-    # (frontier_auto_buckets buckets) and stays there — small crawls never
-    # pay the session-catalog table cost, big ones get the shuffle-free
-    # politeness rank without opting in. 0 disables auto-migration.
-    frontier_auto_buckets: int = 64
-    frontier_auto_bucket_threshold: int = 1_000_000
     # Arrow batch rows for the pandas-UDF stages. html blobs are multi-KB,
     # so Spark's default 10k-row batches balloon to 100+ MB of Python-side
     # objects per concurrent worker; with 32 workers the extract stage

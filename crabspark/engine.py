@@ -31,7 +31,10 @@ Scale design notes (10^10 frontier):
 - the per-round O(frontier) that remains is the scheduling SCAN
   (per-host politeness rank needs every host's minimum); on a real cluster
   the frontier table would be bucketed by host so that rank is
-  shuffle-free — the read itself is irreducible for global scheduling;
+  shuffle-free — the read itself is irreducible for global scheduling.
+  A host-bucketed layout (a Spark bucketed table plus a mid-crawl
+  migration into it) was built, measured slower than this delta chain
+  with a frontier of up to 20k rows on 4 and 16 cores, and removed;
 - the cap trim is a range-partitioned exact top-k (per-partition counts +
   boundary-partition rank), never a single-partition global sort;
 - the work stages are not repartitioned: a broadcast fetch join runs the
@@ -131,26 +134,17 @@ class Engine:
             )
             workdir = self._ephemeral_root
         self.catalog = Catalog(workdir, spark)
-        # host-bucketed frontier layout (cfg.frontier_buckets > 0): the
-        # politeness rank runs shuffle-free over the bucketed scan
-        self.bucketed_frontier = None
-        if cfg.frontier_buckets:
-            from crabspark.tables import BucketedFrontier
-
-            self.bucketed_frontier = BucketedFrontier(
-                self.catalog, cfg.frontier_buckets
+        # stores written with the removed host-bucketed frontier layout keep
+        # their frontier outside the delta chain: resuming one would stop at
+        # once or re-seed over its own seen set
+        if self.catalog.extra("frontier_bucketed_n") or os.path.isdir(
+            os.path.join(self.catalog.root, "frontier_bucketed")
+        ):
+            raise ValueError(
+                f"store {self.catalog.root} holds a host-bucketed frontier, "
+                "a layout this build no longer reads; re-crawl into a fresh "
+                "workdir"
             )
-        else:
-            # a previous run may have auto-migrated this store to the
-            # bucketed layout (frontier size crossed the threshold); the
-            # committed extra — not the config — is the source of truth
-            nb = self.catalog.extra("frontier_bucketed_n")
-            if nb:
-                from crabspark.tables import BucketedFrontier
-
-                self.bucketed_frontier = BucketedFrontier(
-                    self.catalog, int(nb)
-                )
         with job_label(spark, "init"):  # parquet schema discovery
             self.pages = spark.read.parquet(pages_path)
             self.robots_df = (
@@ -195,8 +189,8 @@ class Engine:
         self._queued_seeds = set(self.catalog.extra("queued_seeds", []))
         # measurement-only: per-round (select, pipeline, write+commit)
         # wall splits for this PROCESS's rounds (not persisted; resumes
-        # start empty) — bench/scaling.py exports them for the phase-level
-        # Amdahl decomposition in BENCH/BASELINE.md
+        # start empty) — bench.py and perfbench/workloads.py sum them into
+        # their crawl breakdowns, bench/scaling.py exports them per round
         self.phase_splits: list[dict] = []
 
         self.round = self.catalog.committed_round + 1
@@ -204,11 +198,6 @@ class Engine:
         # driver-side frontier-size estimate (None = unknown -> always trim)
         fs = self.catalog.extra("frontier_size")
         self.frontier_size = int(fs) if fs is not None else None
-        # consecutive pre-select folds skipped because the live frontier
-        # was drain-sized (see _round); in-memory only — a resume starts
-        # at 0 and simply folds one round earlier than strictly needed
-        self._fold_skips = 0
-        self.fold_skips_total = 0  # observability (tests/metrics)
         bloom_path = self.catalog.extra("bloom")
         if bloom_path and os.path.exists(bloom_path) and not fresh_seen:
             self.bloom = Bloom.load(
@@ -230,8 +219,7 @@ class Engine:
                     self.round - 1,
                     {"total_visited": 0, "frontier_size": self.frontier_size,
                      "queued_seeds": sorted(self._queued_seeds),
-                     "frontier_folded_round": self.round - 1,
-                     "frontier_seeded": True, "visited_at_fold": 0},
+                     "frontier_folded_round": self.round - 1},
                 )
 
     # ------------------------------------------------------------------
@@ -341,10 +329,7 @@ class Engine:
                 )
             )
         seeds_df = self.spark.createDataFrame(rows, FRONTIER_SCHEMA)
-        if self.bucketed_frontier is not None:
-            self.bucketed_frontier.replace(seeds_df, self.round - 1)
-        else:
-            self.catalog.overwrite("frontier", seeds_df, self.round)
+        self.catalog.overwrite("frontier", seeds_df, self.round)
         self.frontier_size = len(rows)
         self._queued_seeds = set(seen_canons)
 
@@ -354,33 +339,18 @@ class Engine:
         the whole-crawl timeout elapses (the reference's watchdog,
         src/main.rs:82-98 — except we stop cleanly at a round boundary
         with everything committed, instead of dropping the thread)."""
-        # Bucketed existence must come from COMMITTED manifest state, not
-        # raw directory contents: a crash between the seed replace() and the
-        # init commit leaves physical seed files with no committed extras —
-        # dir-based exists() would skip re-init and resume half-initialized
-        # (ADVICE r3). replace() is idempotent, so re-seeding is safe.
-        # A committed streaming ingest ALSO counts as evidence (an
-        # ingest-first store holds real committed roots that a re-seed
-        # replace() would wipe — matching the delta-chain path, where an
-        # ingest delta makes exists() true and config seeds stay unqueued).
-        frontier_exists = (
-            (self.bucketed_frontier.exists()
-             and (bool(self.catalog.extra("frontier_seeded", False))
-                  or int(self.catalog.extra("ingested_candidates_batch", -1))
-                  >= 0))
-            if self.bucketed_frontier is not None
-            else self.catalog.exists("frontier")
-        )
-        if not frontier_exists:
+        # existence is COMMITTED manifest state: a seed delta staged by a
+        # crash before the init commit is unreferenced, so the store
+        # re-seeds; a committed streaming-ingest delta counts as a frontier
+        # (its roots are real and config seeds stay unqueued)
+        if not self.catalog.exists("frontier"):
             with job_label(self.spark, "init"):
                 self._init_frontier()
                 self.catalog.commit(
                     self.round - 1,
                     {"total_visited": self.total_visited,
                      "frontier_size": self.frontier_size,
-                     "queued_seeds": sorted(self._queued_seeds),
-                     "frontier_seeded": True,
-                     "visited_at_fold": self.total_visited},
+                     "queued_seeds": sorted(self._queued_seeds)},
                 )
         started = time.monotonic()
         rounds_done = 0
@@ -431,36 +401,6 @@ class Engine:
             self._debug_log(f"round {r}: frontier empty (driver estimate)")
             return False
         jobs0 = self._job_counter()
-        # Bucketed layout: the live-mask side (visits since the last fold)
-        # must stay broadcast-small. When the accumulated visit count since
-        # the fold outgrows the broadcast limit, fold NOW (physically apply
-        # the visits) instead of force-broadcasting an unbounded side — at
-        # 10^10-frontier scale a fold-period of large batches would blow the
-        # driver/broadcast limit and fail the round (ADVICE r3).
-        if self.bucketed_frontier is not None:
-            bound = self._visits_since_fold()
-            if bound is None or bound > self.cfg.fetch_broadcast_limit:
-                # The fold's dominant cost is the O(live+adds) bucketed
-                # REWRITE; the liveness anti-join it would save runs inside
-                # _live_frontier either way (as a shuffle instead of a
-                # broadcast once the mask is oversized). On a drain-sized
-                # frontier — the tail rounds after the crawl's biggest
-                # batch — the rewrite is pure overhead: pay one cheap
-                # shuffled rank instead and skip the fold. Consecutive
-                # skips are capped so a long small-frontier tail cannot
-                # grow the mask join unboundedly (each skipped round
-                # re-scans all visits since the last fold).
-                small_live = (
-                    self.frontier_size is not None
-                    and self.frontier_size
-                    <= self.cfg.fetch_broadcast_limit // 4
-                )
-                if small_live and self._fold_skips < 2:
-                    self._fold_skips += 1
-                    self.fold_skips_total += 1
-                else:
-                    self._fold_frontier(r - 1)
-                    self._fold_skips = 0
         ops = self.catalog.read("visited_ops")
         frontier = self._live_frontier(ops)
         if frontier is None:
@@ -497,14 +437,10 @@ class Engine:
                     )
                 ).alias("visited_seeds")
             )
-        # under the host-bucketed layout, same-host rows are already
-        # co-located: the salt pre-rank would only reintroduce the shuffle
-        # the bucketing removed, so the quota rank runs directly
-        salt = 1 if self.bucketed_frontier is not None else cfg.salt_buckets
         batch = (
             frontier_mod.select_batch(
                 frontier, trim, cfg.scheduling, cfg.per_host_quota,
-                salt,
+                cfg.salt_buckets,
             )
             .observe(batch_obs, *obs_exprs)
             .localCheckpoint()
@@ -961,14 +897,7 @@ class Engine:
             # frontier is adds-only: O(children) written per round; visited
             # rows are masked at read time and physically dropped by the
             # periodic fold (never an O(frontier) rewrite per round)
-            if self.bucketed_frontier is not None:
-                tasks.append(
-                    lambda: self.bucketed_frontier.insert(new_rows, r)
-                )
-            else:
-                tasks.append(
-                    lambda: self.catalog.append("frontier", new_rows, r)
-                )
+            tasks.append(lambda: self.catalog.append("frontier", new_rows, r))
         if img_rows is not None and stats["img_n"] > 0:
             tasks.append(lambda: self.catalog.append("images", img_rows, r))
 
@@ -1013,15 +942,11 @@ class Engine:
                 },
             )
         except BaseException:
-            if self.bucketed_frontier is not None:
-                self.bucketed_frontier.rollback()
             self.catalog.abort()
             raise
         finally:
             hits.unpersist()
             judged.unpersist()
-        if self.bucketed_frontier is not None:
-            self.bucketed_frontier.finish_round()
         # driver counters advance only after a successful commit, so a caller
         # that catches a failed round and retries sees pre-round state
         self.total_visited = new_total
@@ -1044,26 +969,12 @@ class Engine:
             f"jobs {self._job_counter() - jobs0})"
         )
         sc.setJobDescription(f"round {r}: post-commit")
-        # auto-migrate to the host-bucketed layout once the frontier is big
-        # enough that the politeness-rank shuffle dominates (the committed
-        # extra makes the migration sticky across resumes)
-        if (
-            self.bucketed_frontier is None
-            and self.cfg.frontier_auto_buckets
-            and self.frontier_size is not None
-            and self.frontier_size >= self.cfg.frontier_auto_bucket_threshold
-        ):
-            self._migrate_to_bucketed(r)
         # keep merge-on-read cost flat: fold long delta chains periodically
         # (the Iceberg rewrite_data_files analogue)
         for t in ("visited_ops", "seen", "edges", "fetched", "metrics", "images"):
             if self.catalog.delta_count(t) > 16:
                 self.catalog.compact(t, r)
-        if self.bucketed_frontier is not None:
-            lc = int(self.catalog.extra("frontier_folded_round", -1))
-            if r - lc > self.cfg.frontier_fold_deltas:
-                self._fold_frontier(r)
-        elif (
+        if (
             self.catalog.delta_count("frontier")
             > self.cfg.frontier_fold_deltas
         ):
@@ -1086,45 +997,6 @@ class Engine:
         return True
 
     # ------------------------------------------------------------------
-    def _migrate_to_bucketed(self, r: int) -> None:
-        """Fold the delta-chain frontier into a host-bucketed table
-        mid-crawl (equivalent to a physical fold, so added_round values and
-        the visit mask stay valid). Crash-safe: until the commit publishes
-        ``frontier_bucketed_n``, resume keeps reading the untouched
-        delta-chain (the overwrite below stays staged), and orphan bucketed
-        files are rewritten by the next migration attempt."""
-        from crabspark.tables import BucketedFrontier
-
-        try:
-            bf = BucketedFrontier(
-                self.catalog, self.cfg.frontier_auto_buckets
-            )
-        except Exception as e:  # session without catalog support
-            self._debug_log(f"auto-bucket unavailable, staying flat: {e}")
-            self.cfg.frontier_auto_buckets = 0
-            return
-        live = self._live_frontier(self.catalog.read("visited_ops"))
-        if live is None:
-            return
-        bf.replace(live, r)
-        # retire the delta-chain table (logical truncate; GC'd post-commit)
-        self.catalog.overwrite("frontier", self._empty(FRONTIER_SCHEMA), r)
-        self.catalog.commit(
-            r,
-            {
-                "frontier_bucketed_n": self.cfg.frontier_auto_buckets,
-                "frontier_folded_round": r,
-                "visited_at_fold": self.total_visited,
-                "frontier_seeded": True,
-            },
-        )
-        self.bucketed_frontier = bf
-        self.catalog.gc_superseded("frontier")
-        self._debug_log(
-            f"frontier auto-migrated to {self.cfg.frontier_auto_buckets} "
-            f"host buckets at ~{self.frontier_size} rows"
-        )
-
     def _live_frontier(self, ops: DataFrame | None) -> DataFrame | None:
         """Merge-on-read view of the adds-only frontier: a row is live iff
         no LATER round visited its canon. ``max(visit round) <= added_round``
@@ -1132,39 +1004,8 @@ class Engine:
         visits happen at the start and discovery at the end, so a canon
         visited in round r and re-discovered in round r is queued again.
         Visits at or before the last fold are already applied physically,
-        so the mask join scans only the visits of the last few rounds.
-
-        Bucketed layout: the mask is a BROADCAST left-anti join (the visits
-        side is bounded by fold-period × batch size), which PRESERVES the
-        scan's hash-partitioning on host — the politeness window then needs
-        no Exchange. ``EXISTS visit with round > added_round`` is exactly
-        the ``max(visit round) <= added_round`` liveness predicate."""
+        so the mask join scans only the visits of the last few rounds."""
         lc = int(self.catalog.extra("frontier_folded_round", -1))
-        if self.bucketed_frontier is not None:
-            adds = self.bucketed_frontier.read()
-            if adds is None:
-                return None
-            if ops is None:
-                return adds
-            visits = ops.filter(
-                (F.col("op") == "visit") & (F.col("round") > lc)
-            ).select("url", "round")
-            # size-gate the mask broadcast: _round() folds before the mask
-            # side can outgrow the limit, so this normally broadcasts (and
-            # preserves the scan's host hash-partitioning — the politeness
-            # rank stays exchange-free). The defensive else-branch (resumed
-            # workdir mid-state) lets Spark plan a shuffle join instead of
-            # force-broadcasting an unbounded side.
-            bound = self._visits_since_fold()
-            mask_small = (
-                bound is not None and bound <= self.cfg.fetch_broadcast_limit
-            )
-            return adds.join(
-                F.broadcast(visits) if mask_small else visits,
-                (adds["canon"] == visits["url"])
-                & (visits["round"] > adds["added_round"]),
-                "left_anti",
-            )
         adds = self.catalog.read("frontier")
         if adds is None:
             return None
@@ -1185,14 +1026,6 @@ class Engine:
             .drop("__vmax")
         )
 
-    def _visits_since_fold(self) -> int | None:
-        """Upper bound on the live-mask side: visits accumulated since the
-        last physical fold (every batch row is exactly one visit op)."""
-        vat = self.catalog.extra("visited_at_fold")
-        if vat is None:
-            return None
-        return max(0, self.total_visited - int(vat))
-
     def _fold_frontier(self, r: int) -> None:
         """Physically drop visited rows and fold the delta chain to one
         file set — the amortized O(live) rewrite (every
@@ -1201,22 +1034,9 @@ class Engine:
         live = self._live_frontier(self.catalog.read("visited_ops"))
         if live is None:
             return
-        extras = {
-            "frontier_folded_round": r,
-            # resets the mask-side bound _visits_since_fold() tracks
-            "visited_at_fold": self.total_visited,
-        }
-        if self.bucketed_frontier is not None:
-            # added_round values are preserved, so the committed-round read
-            # mask stays valid; a crash mid-swap rolls forward from the
-            # intent, and an uncommitted folded_round extra only widens the
-            # (idempotent) visit mask
-            self.bucketed_frontier.replace(live, r)
-            self.catalog.commit(r, extras)
-        else:
-            self.catalog.overwrite("frontier", live, r)
-            self.catalog.commit(r, extras)
-            self.catalog.gc_superseded("frontier")
+        self.catalog.overwrite("frontier", live, r)
+        self.catalog.commit(r, {"frontier_folded_round": r})
+        self.catalog.gc_superseded("frontier")
 
     # ------------------------------------------------------------------
     def ingest_candidates(self, cand_catalog) -> int:
@@ -1273,20 +1093,7 @@ class Engine:
             )
             return 0
         try:
-            if self.bucketed_frontier is not None:
-                # guard: this insert lands at rnd == committed_round, so the
-                # round check alone cannot see a crash before the paired
-                # commit — recover() rolls it back while the committed
-                # high-water mark is still behind stream_mark (ADVICE r3)
-                self.bucketed_frontier.insert(
-                    new_rows, r - 1,
-                    guard={
-                        "key": "ingested_candidates_batch",
-                        "value": stream_mark,
-                    },
-                )
-            else:
-                self.catalog.append("frontier", new_rows, r - 1)
+            self.catalog.append("frontier", new_rows, r - 1)
             new_seen = new_rows.select(
                 F.col("canon").alias("url"), "sha1",
                 F.lit(r - 1).alias("round"),
@@ -1319,12 +1126,8 @@ class Engine:
                 },
             )
         except BaseException:
-            if self.bucketed_frontier is not None:
-                self.bucketed_frontier.rollback()
             self.catalog.abort()
             raise
-        if self.bucketed_frontier is not None:
-            self.bucketed_frontier.finish_round()
         self.frontier_size = new_size
         self._queued_seeds = queued_after
         self._debug_log(f"ingested {n} streamed candidates as new roots")

@@ -69,11 +69,12 @@ class Catalog:
 
     # Manifest format version. Bump when a table schema or required extra
     # changes incompatibly (v2: frontier.added_round, metrics.frontier_size,
-    # fetched.ua, extras.queued_seeds / frontier_folded_round; v3:
-    # extras.frontier_seeded gates bucketed-seed-init commit state,
-    # extras.visited_at_fold bounds the live-frontier mask side). Resuming a
-    # workdir written by an older format fails HERE with a clear message
-    # instead of mid-round with a missing-column AnalysisException.
+    # fetched.ua, extras.queued_seeds / frontier_folded_round; v3: extras
+    # frontier_seeded / visited_at_fold, which only the removed
+    # host-bucketed frontier read — Engine refuses a v3 store that holds
+    # that layout). Resuming a workdir written by an older format fails
+    # HERE with a clear message instead of mid-round with a missing-column
+    # AnalysisException.
     FORMAT_VERSION = 3
 
     # --- manifest ---
@@ -301,217 +302,6 @@ class Catalog:
 
     def extra(self, key: str, default=None):
         return self.state["extras"].get(key, default)
-
-
-class BucketedFrontier:
-    """Host-bucketed frontier layout: the adds live in a Spark bucketed
-    table (``CLUSTERED BY (host) SORTED BY (host, priority)``) so the
-    per-round politeness rank runs with NO shuffle Exchange — the scan
-    itself reports hash-partitioning on host, the (broadcast) live-mask
-    anti-join preserves it, and the window's ClusteredDistribution(host)
-    is already satisfied. This is the engine-docstring's "on a real
-    cluster the frontier table would be bucketed by host" made real (the
-    Iceberg bucket-partitioned-table analogue); at 10^10 rows it removes
-    the one remaining per-round O(frontier) shuffle.
-
-    Crash consistency (the manifest cannot atomically gate files inside a
-    live bucketed table): a write-ahead intent file records the directory's
-    expected state before any mutation; the read path ADDITIONALLY masks
-    ``added_round > committed_round``. A crashed round's files are deleted
-    on recover(); a crashed fold is rolled forward/back deterministically
-    from the intent's file list. Single writer assumed (the engine)."""
-
-    DDL_COLUMNS = (
-        "url string, canon string, sha1 string, host string, "
-        "referrer string, priority string, depth int, added_round int"
-    )
-
-    def __init__(self, catalog: Catalog, n_buckets: int):
-        self.catalog = catalog
-        self.spark = catalog.spark
-        self.n_buckets = int(n_buckets)
-        self.dir = os.path.join(catalog.root, "frontier_bucketed")
-        self.stage_dir = os.path.join(catalog.root, "frontier_stage")
-        self.intent_path = os.path.join(catalog.root, "_frontier_intent.json")
-        # table names are session-global; scope them to this workdir
-        import hashlib
-
-        tag = hashlib.sha1(catalog.root.encode()).hexdigest()[:12]
-        self.table = f"crabspark_frontier_{tag}"
-        self.stage_table = f"crabspark_frontier_stage_{tag}"
-        # crash-matrix test hook: set to a step name to abort just after
-        # that step executes (simulated kill); always None in production
-        self._kill_at: str | None = None
-        os.makedirs(self.dir, exist_ok=True)
-        self._register(self.table, self.dir)
-        self.recover()
-
-    def _maybe_kill(self, step: str) -> None:
-        if self._kill_at == step:
-            raise RuntimeError(f"simulated crash at {step}")
-
-    def _register(self, name: str, location: str) -> None:
-        self.spark.sql(
-            f"CREATE TABLE IF NOT EXISTS {name} ({self.DDL_COLUMNS}) "
-            f"USING PARQUET CLUSTERED BY (host) "
-            f"SORTED BY (host, priority) INTO {self.n_buckets} BUCKETS "
-            f"LOCATION '{location}'"
-        )
-
-    # --- intent bookkeeping ---
-    def _files(self, d: str) -> list[str]:
-        try:
-            return sorted(
-                f for f in os.listdir(d)
-                if not f.startswith("_") and not f.startswith(".")
-            )
-        except OSError:
-            return []
-
-    def _write_intent(self, payload: dict) -> None:
-        tmp = self.intent_path + f".tmp-{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(payload, f)
-        os.replace(tmp, self.intent_path)
-
-    def _read_intent(self) -> dict | None:
-        try:
-            with open(self.intent_path) as f:
-                return json.load(f)
-        except (OSError, json.JSONDecodeError):
-            return None
-
-    def recover(self) -> None:
-        """Roll an interrupted mutation back (insert) or forward (fold)
-        so the directory matches the last committed manifest state."""
-        intent = self._read_intent()
-        if intent is None:
-            # a stage dir with no intent is an abandoned fold staging
-            # (crash before the intent became durable): pure garbage
-            shutil.rmtree(self.stage_dir, ignore_errors=True)
-            return
-        if intent.get("op") == "insert":
-            # An insert is uncommitted when its round is past the manifest,
-            # OR when its guard extra (a manifest key the paired commit was
-            # going to advance — e.g. the streaming-ingest high-water mark,
-            # which inserts at rnd == committed_round) is still behind the
-            # value the intent recorded. Without the guard, a crash between
-            # an ingest insertInto and catalog.commit would KEEP the
-            # physically-inserted frontier rows while dropping the paired
-            # seen delta + bloom snapshot + high-water mark — re-ingesting
-            # the same stream batch as duplicates and breaking the
-            # "every frontier row except seeds is in seen" invariant.
-            guard = intent.get("guard")
-            uncommitted = intent["round"] > self.catalog.committed_round or (
-                guard is not None
-                and int(self.catalog.extra(guard["key"], -1)) < int(guard["value"])
-            )
-            if uncommitted:
-                keep = set(intent["keep"])
-                for f in self._files(self.dir):
-                    if f not in keep:
-                        os.remove(os.path.join(self.dir, f))
-        elif intent.get("op") == "fold":
-            # roll FORWARD: the stage holds the complete folded file set;
-            # table dir must become exactly those files
-            new_files = set(intent["new_files"])
-            for f in self._files(self.dir):
-                if f not in new_files:
-                    os.remove(os.path.join(self.dir, f))
-            for f in self._files(self.stage_dir):
-                if f in new_files:
-                    dst = os.path.join(self.dir, f)
-                    if not os.path.exists(dst):
-                        os.replace(os.path.join(self.stage_dir, f), dst)
-        shutil.rmtree(self.stage_dir, ignore_errors=True)
-        try:
-            os.remove(self.intent_path)
-        except OSError:
-            pass
-        self.spark.sql(f"REFRESH TABLE {self.table}")
-
-    # --- reads ---
-    def read(self) -> DataFrame | None:
-        if not self._files(self.dir):
-            return None
-        committed = self.catalog.committed_round
-        from pyspark.sql import functions as F
-
-        return self.spark.table(self.table).filter(
-            F.col("added_round") <= F.lit(committed)
-        )
-
-    def exists(self) -> bool:
-        return bool(self._files(self.dir))
-
-    # --- writes (intent-guarded; finish_round()/rollback() must follow) ---
-    def insert(self, df: DataFrame, rnd: int, guard: dict | None = None) -> None:
-        """Append one round's adds. The intent snapshot lets rollback (or
-        crash recovery) delete exactly the files this insert created.
-        ``guard`` = {"key", "value"}: commit-confirmation for inserts whose
-        rnd does not exceed committed_round (streaming ingest) — recover()
-        rolls the insert back while the manifest extra ``key`` is still
-        below ``value`` (see recover())."""
-        intent = {"op": "insert", "round": rnd, "keep": self._files(self.dir)}
-        if guard is not None:
-            intent["guard"] = guard
-        self._write_intent(intent)
-        self._maybe_kill("insert-intent")
-        cols = [c.split(" ")[0] for c in self.DDL_COLUMNS.split(", ")]
-        df.select(*cols).write.insertInto(self.table)
-        self._maybe_kill("insert-done")
-
-    def finish_round(self) -> None:
-        """Call after the catalog manifest commit: the insert is durable."""
-        try:
-            os.remove(self.intent_path)
-        except OSError:
-            pass
-
-    def rollback(self) -> None:
-        """Undo an uncommitted insert (failed round)."""
-        intent = self._read_intent()
-        if intent and intent.get("op") == "insert":
-            keep = set(intent["keep"])
-            for f in self._files(self.dir):
-                if f not in keep:
-                    os.remove(os.path.join(self.dir, f))
-            os.remove(self.intent_path)
-            self.spark.sql(f"REFRESH TABLE {self.table}")
-
-    def replace(self, df: DataFrame, rnd: int) -> None:
-        """Rewrite the table to exactly ``df``'s rows (fold / re-init):
-        stage the new file set as a bucketed table, then swap under a
-        roll-forward intent. added_round values are preserved by the
-        caller, so the committed-round read mask stays correct."""
-        shutil.rmtree(self.stage_dir, ignore_errors=True)
-        os.makedirs(self.stage_dir, exist_ok=True)
-        self.spark.sql(f"DROP TABLE IF EXISTS {self.stage_table}")
-        self._register(self.stage_table, self.stage_dir)
-        cols = [c.split(" ")[0] for c in self.DDL_COLUMNS.split(", ")]
-        df.select(*cols).write.insertInto(self.stage_table)
-        new_files = self._files(self.stage_dir)
-        self._maybe_kill("fold-staged")
-        self._write_intent(
-            {"op": "fold", "round": rnd, "new_files": new_files}
-        )
-        self._maybe_kill("fold-intent")
-        for f in self._files(self.dir):
-            os.remove(os.path.join(self.dir, f))
-        self._maybe_kill("fold-old-deleted")
-        for i, f in enumerate(new_files):
-            os.replace(
-                os.path.join(self.stage_dir, f), os.path.join(self.dir, f)
-            )
-            if i == 0:
-                self._maybe_kill("fold-one-moved")
-        self._maybe_kill("fold-moved")
-        os.remove(self.intent_path)
-        shutil.rmtree(self.stage_dir, ignore_errors=True)
-        self.spark.sql(f"DROP TABLE IF EXISTS {self.stage_table}")
-        # bucketed scans list files through the session catalog's cache;
-        # swapped files need an explicit refresh
-        self.spark.sql(f"REFRESH TABLE {self.table}")
 
 
 def bucketize_pages(

@@ -1,32 +1,44 @@
-"""Host-bucketed frontier layout (the 10^10-scale scheduling path).
+"""Frontier crash consistency and fold mechanics (the adds-only delta chain).
 
-The frontier adds live in a Spark bucketed table (CLUSTERED BY host
-SORTED BY host, priority), so the per-round politeness rank needs NO
-shuffle Exchange: the scan reports hash-partitioning on host, the
-broadcast live-mask anti-join preserves it, and the window's required
-distribution is already satisfied. Checked here:
+The frontier is one catalog table: seeds are an overwrite delta, every
+round appends its children as one delta, and the periodic fold
+(``Engine._fold_frontier``) rewrites the live rows as a single overwrite
+delta and garbage-collects the superseded ones. Atomicity lives in the
+catalog manifest, so a kill at any point leaves either the last committed
+rows or the folded rows, never a mix. Checked here:
 
-- crawl parity: bucketed and delta-chain layouts produce the identical
-  visit log and seen set;
-- physical plan: zero shuffle exchanges between the bucketed scan and the
-  rank filter, and the scan is bucket-pruned (`Bucketed: true`);
-- crash consistency: an uncommitted insert is rolled back (explicitly or
-  by recover()), an interrupted fold rolls forward from the intent.
+- a failed round and an uncommitted (staged) delta leave the committed
+  frontier unchanged;
+- the fold keeps the live rows, leaves one overwrite delta, removes the
+  superseded directories, and a kill after its commit reads the folded set;
+- a kill inside ``ingest_candidates`` or between the seed write and the
+  init commit rolls back cleanly, and the retry queues each row once;
+- the crash matrix: a kill at every write, commit and GC step of a
+  frontier append and a fold;
+- a store written with the removed host-bucketed layout is refused.
+
+Kills are simulated by monkeypatching ``Catalog``, the parquet writer,
+``shutil.rmtree`` or ``os.replace`` to raise at the chosen step; recovery
+is a fresh ``Catalog``/``Engine`` over the same workdir.
 """
 
-import hashlib
 import os
+import shutil
 
+import pandas as pd
 import pytest
+from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
+from crabspark import tables, urlkit
 from crabspark.config import Config
-from crabspark.engine import Engine
-from crabspark.tables import BucketedFrontier, Catalog
+from crabspark.engine import FRONTIER_SCHEMA, Engine
+from crabspark.tables import Catalog
 from fixtures import gen_pages
 from tests.sparkutil import get_spark
 
 N_PAGES = 40
+OPS = "url string, referrer string, round int, priority string, op string"
 
 
 @pytest.fixture(scope="module")
@@ -36,203 +48,252 @@ def spark():
 
 @pytest.fixture(scope="module")
 def data(tmp_path_factory):
-    out = tmp_path_factory.mktemp("fixture_bkt")
+    out = tmp_path_factory.mktemp("fixture_frontier")
     gen_pages.write(str(out), n_pages=N_PAGES, seed=11)
     return str(out)
 
 
-def _cfg(buckets: int) -> Config:
+def _cfg() -> Config:
     c = Config.new()
     c.seeds = [gen_pages.SEED_URL]
     c.max_urls_to_visit = 5000
     c.scheduling = "throughput"
     c.per_host_quota = 3
     c.collect_images = False
-    c.frontier_buckets = buckets
     return c
 
 
-def _crawl(spark, data, tmp_path_factory, buckets):
-    eng = Engine(
-        spark, _cfg(buckets),
-        str(tmp_path_factory.mktemp(f"work_bkt{buckets}")),
+def _engine(spark, data, work, cfg=None) -> Engine:
+    return Engine(
+        spark, cfg or _cfg(), str(work),
         pages_path=f"{data}/pages.parquet",
         robots_path=f"{data}/robots.parquet",
     )
-    eng.run()
-    h = hashlib.md5()
-    for row in eng.visit_log().select("round", "priority", "url").collect():
-        h.update(f"{row['round']}|{row['priority']}|{row['url']}\n".encode())
-    seen = hashlib.md5(
-        "\n".join(sorted(r["url"] for r in eng.read_seen().collect())).encode()
-    ).hexdigest()
-    return eng, h.hexdigest(), seen
 
 
-@pytest.fixture(scope="module")
-def both(spark, data, tmp_path_factory):
-    e_delta, log_d, seen_d = _crawl(spark, data, tmp_path_factory, 0)
-    e_bkt, log_b, seen_b = _crawl(spark, data, tmp_path_factory, 8)
-    return {
-        "delta": (e_delta, log_d, seen_d),
-        "bucket": (e_bkt, log_b, seen_b),
-    }
-
-
-def test_bucketed_crawl_matches_delta_layout(both):
-    _, log_d, seen_d = both["delta"]
-    _, log_b, seen_b = both["bucket"]
-    assert log_b == log_d
-    assert seen_b == seen_d
-
-
-def test_rank_plan_has_no_shuffle_exchange(both):
-    """The whole select path — bucketed scan -> live-mask anti-join ->
-    politeness window -> rank filter — must contain zero shuffle
-    exchanges (BroadcastExchange for the tiny mask side is fine)."""
-    from crabspark import frontier as frontier_mod
-
-    eng = both["bucket"][0]
-    live = eng._live_frontier(eng.catalog.read("visited_ops"))
-    assert live is not None
-    ranked = frontier_mod.select_batch(live, None, "throughput", 3, 1)
-    plan = ranked._jdf.queryExecution().executedPlan().toString()
-    assert "Bucketed: true" in plan
-    assert "Exchange hashpartitioning" not in plan
-    assert "Exchange rangepartitioning" not in plan
-
-
-def test_insert_rollback_removes_uncommitted_files(spark, tmp_path):
-    cat = Catalog(str(tmp_path / "wd"), spark)
-    bf = BucketedFrontier(cat, 4)
-    df = spark.createDataFrame(
-        [("u", "c", "s", "h.org", "r", "0000", 0, 0)],
-        "url string, canon string, sha1 string, host string, "
-        "referrer string, priority string, depth int, added_round int",
-    )
-    bf.insert(df, 0)
-    assert bf._files(bf.dir)
-    bf.rollback()
-    assert not bf._files(bf.dir)
-    assert bf.read() is None
-
-
-def test_crash_recovery_drops_uncommitted_insert(spark, tmp_path):
-    """An insert with no manifest commit (simulated crash: no
-    finish_round) must vanish when a fresh BucketedFrontier recovers."""
-    cat = Catalog(str(tmp_path / "wd"), spark)
-    bf = BucketedFrontier(cat, 4)
-    schema = (
-        "url string, canon string, sha1 string, host string, "
-        "referrer string, priority string, depth int, added_round int"
-    )
-    committed = spark.createDataFrame(
-        [("u0", "c0", "s0", "a.org", "r", "0000", 0, 0)], schema
-    )
-    bf.insert(committed, 0)
-    cat.commit(0)
-    bf.finish_round()
-    # crashed round 1: insert, NO commit, NO finish_round
-    orphan = spark.createDataFrame(
-        [("u1", "c1", "s1", "b.org", "r", "0001", 1, 1)], schema
-    )
-    bf.insert(orphan, 1)
-    assert os.path.exists(bf.intent_path)
-    # resume path: fresh catalog + frontier store recover
-    cat2 = Catalog(str(tmp_path / "wd"), spark)
-    bf2 = BucketedFrontier(cat2, 4)
-    rows = bf2.read().collect()
-    assert [r["canon"] for r in rows] == ["c0"]
-    assert not os.path.exists(bf2.intent_path)
-
-
-def test_replace_folds_and_preserves_mask(spark, tmp_path):
-    cat = Catalog(str(tmp_path / "wd"), spark)
-    bf = BucketedFrontier(cat, 4)
-    schema = (
-        "url string, canon string, sha1 string, host string, "
-        "referrer string, priority string, depth int, added_round int"
-    )
-    rows = [
-        (f"u{i}", f"c{i}", f"s{i}", f"h{i % 3}.org", "r",
-         f"{i:04d}", 0, i % 2)
-        for i in range(10)
+def _rows(i0, i1, added_round):
+    return [
+        (f"https://h{i % 3}.org/p{i}", f"c{i}", f"s{i}", f"h{i % 3}.org",
+         "r", f"{i:04d}", 0, added_round)
+        for i in range(i0, i1)
     ]
-    bf.insert(spark.createDataFrame(rows, schema), 1)
-    cat.commit(1)
-    bf.finish_round()
-    assert bf.read().count() == 10
-    # fold to only even canons, preserving added_round
-    live = bf.read().filter(F.col("depth") == 0).filter(
-        F.col("canon").isin([f"c{i}" for i in range(0, 10, 2)])
+
+
+def _store(spark, root):
+    """A committed two-round frontier: seeds c0..c5 (overwrite, round 0),
+    children c6..c7 (append, round 1), and round-1 visits of c0, c2, c4.
+    Live rows: c1, c3, c5, c6, c7."""
+    cat = Catalog(str(root), spark)
+    cat.overwrite(
+        "frontier", spark.createDataFrame(_rows(0, 6, 0), FRONTIER_SCHEMA), 0
     )
-    bf.replace(live, 2)
-    cat.commit(2, {"frontier_folded_round": 2})
-    got = sorted(r["canon"] for r in bf.read().collect())
-    assert got == [f"c{i}" for i in range(0, 10, 2)]
-    assert not os.path.exists(bf.intent_path)
-    # stage dir cleaned
-    assert not os.path.exists(bf.stage_dir)
-
-
-def test_fold_crash_rolls_forward(spark, tmp_path):
-    """Simulate a crash between 'old files deleted' and 'new files moved
-    in': recover() must complete the swap from the intent file list."""
-    import json
-    import shutil
-
-    cat = Catalog(str(tmp_path / "wd"), spark)
-    bf = BucketedFrontier(cat, 4)
-    schema = (
-        "url string, canon string, sha1 string, host string, "
-        "referrer string, priority string, depth int, added_round int"
+    cat.commit(0)
+    cat.append(
+        "frontier", spark.createDataFrame(_rows(6, 8, 1), FRONTIER_SCHEMA), 1
     )
-    bf.insert(
+    cat.append(
+        "visited_ops",
         spark.createDataFrame(
-            [("u0", "c0", "s0", "a.org", "r", "0000", 0, 0)], schema
+            [(f"c{i}", "r", 1, f"{i:04d}", "visit") for i in (0, 2, 4)], OPS
+        ),
+        1,
+    )
+    cat.commit(1)
+    return cat
+
+
+ALL = [f"c{i}" for i in range(8)]
+LIVE = ["c1", "c3", "c5", "c6", "c7"]
+
+
+def _canons(df):
+    return sorted(r["canon"] for r in df.select("canon").collect())
+
+
+def _committed(spark, root):
+    """The committed frontier table's canons, read by a fresh catalog."""
+    return _canons(Catalog(str(root), spark).read("frontier"))
+
+
+def _live(eng):
+    return _canons(eng._live_frontier(eng.catalog.read("visited_ops")))
+
+
+def _frontier_dirs(root):
+    return sorted(os.listdir(os.path.join(str(root), "frontier")))
+
+
+def test_insert_rollback_removes_uncommitted_files(
+    spark, data, tmp_path, monkeypatch
+):
+    """A round whose edges write raises aborts: the frontier delta it
+    staged is never committed, and the round can be retried."""
+    eng = _engine(spark, data, tmp_path / "wd")
+    eng.run(max_rounds=0)  # seed init only
+    before = _committed(spark, tmp_path / "wd")
+    deltas = list(eng.catalog.state["tables"]["frontier"]["deltas"])
+    committed_round = eng.catalog.committed_round
+    real_append = Catalog.append
+
+    def failing_append(self, name, df, rnd):
+        if name == "edges":
+            raise RuntimeError("edges write failed")
+        return real_append(self, name, df, rnd)
+
+    monkeypatch.setattr(Catalog, "append", failing_append)
+    with pytest.raises(RuntimeError, match="edges write failed"):
+        eng._round()
+    monkeypatch.undo()
+    assert eng.catalog._pending == []
+    assert eng.catalog.state["tables"]["frontier"]["deltas"] == deltas
+    assert eng.catalog.committed_round == committed_round
+    assert _committed(spark, tmp_path / "wd") == before
+    # the retried round commits normally
+    assert eng._round()
+    assert eng.catalog.committed_round == committed_round + 1
+    assert len(_committed(spark, tmp_path / "wd")) > len(before)
+
+
+def test_crash_recovery_drops_uncommitted_insert(spark, data, tmp_path):
+    """A frontier delta staged with no manifest commit (a crashed round)
+    is invisible to a fresh Engine over the same workdir."""
+    cat = _store(spark, tmp_path / "wd")
+    cat.append(
+        "frontier", spark.createDataFrame(_rows(8, 9, 2), FRONTIER_SCHEMA), 2
+    )
+    assert len(_frontier_dirs(tmp_path / "wd")) == 3  # the orphan is on disk
+    eng = _engine(spark, data, tmp_path / "wd")
+    assert eng.round == 2
+    assert _canons(eng.catalog.read("frontier")) == ALL
+    assert _live(eng) == LIVE
+
+
+def test_replace_folds_and_preserves_mask(spark, data, tmp_path):
+    """The fold leaves one overwrite delta holding exactly the live rows
+    (added_round and priority preserved) and removes the superseded
+    delta directories."""
+    _store(spark, tmp_path / "wd")
+    eng = _engine(spark, data, tmp_path / "wd")
+    live_rows = sorted(
+        tuple(r) for r in
+        eng._live_frontier(eng.catalog.read("visited_ops")).collect()
+    )
+    old_dirs = _frontier_dirs(tmp_path / "wd")
+    eng._fold_frontier(2)
+    deltas = eng.catalog.state["tables"]["frontier"]["deltas"]
+    assert [(d["mode"], d["round"]) for d in deltas] == [("overwrite", 2)]
+    assert eng.catalog.extra("frontier_folded_round") == 2
+    assert _committed(spark, tmp_path / "wd") == LIVE
+    eng2 = _engine(spark, data, tmp_path / "wd")
+    assert sorted(
+        tuple(r) for r in
+        eng2._live_frontier(eng2.catalog.read("visited_ops")).collect()
+    ) == live_rows
+    assert not set(old_dirs) & set(_frontier_dirs(tmp_path / "wd"))
+
+
+def test_fold_crash_rolls_forward(spark, data, tmp_path, monkeypatch):
+    """A kill after the fold's commit, before gc_superseded, reads the
+    folded set; the superseded directories are garbage the next GC
+    removes."""
+    _store(spark, tmp_path / "wd")
+    eng = _engine(spark, data, tmp_path / "wd")
+    old_dirs = _frontier_dirs(tmp_path / "wd")
+
+    def killed(self, name):
+        raise RuntimeError("simulated crash")
+
+    monkeypatch.setattr(Catalog, "gc_superseded", killed)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        eng._fold_frontier(2)
+    monkeypatch.undo()
+    assert _committed(spark, tmp_path / "wd") == LIVE
+    eng2 = _engine(spark, data, tmp_path / "wd")
+    assert _live(eng2) == LIVE
+    assert set(old_dirs) <= set(_frontier_dirs(tmp_path / "wd"))
+    eng2.catalog.gc_superseded("frontier")
+    assert not set(old_dirs) & set(_frontier_dirs(tmp_path / "wd"))
+    assert _committed(spark, tmp_path / "wd") == LIVE
+
+
+def _candidates(spark, root, urls):
+    """A streaming-ingest candidates catalog holding ``urls`` as batch 0
+    (the shape crabspark.streaming.start_page_ingest commits)."""
+    parsed = urlkit.parse_serialize(pd.Series(urls, dtype=object))
+    canon = urlkit.canonicalize(parsed["ser"])
+    rows = list(zip(
+        parsed["ser"], canon, urlkit.sha1_hex(canon), parsed["domain"],
+        [0] * len(urls),
+    ))
+    cat = Catalog(str(root), spark)
+    cat.append(
+        "candidates",
+        spark.createDataFrame(
+            rows,
+            "url string, canon string, sha1 string, host string, "
+            "discovered_batch long",
         ),
         0,
     )
-    cat.commit(0)
-    bf.finish_round()
-    # stage a folded file set by hand (reuse replace()'s own staging steps)
-    os.makedirs(bf.stage_dir, exist_ok=True)
-    spark.sql(f"DROP TABLE IF EXISTS {bf.stage_table}")
-    bf._register(bf.stage_table, bf.stage_dir)
-    spark.createDataFrame(
-        [("u9", "c9", "s9", "z.org", "r", "0009", 0, 0)], schema
-    ).select("url", "canon", "sha1", "host", "referrer", "priority",
-             "depth", "added_round").write.insertInto(bf.stage_table)
-    new_files = bf._files(bf.stage_dir)
-    with open(bf.intent_path, "w") as f:
-        json.dump({"op": "fold", "round": 1, "new_files": new_files}, f)
-    # crash here: old files still present, new files still in stage
-    bf2 = BucketedFrontier(Catalog(str(tmp_path / "wd"), spark), 4)
-    got = [r["canon"] for r in bf2.read().collect()]
-    assert got == ["c9"]
-    assert not os.path.exists(bf2.intent_path)
-    shutil.rmtree(bf2.stage_dir, ignore_errors=True)
+    cat.commit(0, {"ingest_last_batch": 0})
+    return cat
 
 
-def test_bucketed_ingest_and_resume(spark, data, tmp_path_factory):
-    """Bucketed frontier x streaming ingest x resume: captures ingested
-    mid-crawl into a host-bucketed frontier are crawled after a resume
-    with a FRESH Engine over the same workdir (re-registers the bucketed
-    table, replays recover())."""
-    import os
+def test_ingest_guard_rolls_back_unconfirmed_insert(
+    spark, data, tmp_path, monkeypatch
+):
+    """A kill inside ingest_candidates before its commit leaves no ingested
+    rows and an unchanged high-water mark; the re-ingest then queues each
+    candidate exactly once."""
+    urls = [f"https://isle.example/p{i}.html" for i in range(3)]
+    cand = _candidates(spark, tmp_path / "cand", urls)
+    _store(spark, tmp_path / "wd")
+    eng = _engine(spark, data, tmp_path / "wd")
+    real_commit = Catalog.commit
 
-    import pandas as pd
+    def killed_commit(self, rnd, extras=None):
+        if extras and "ingested_candidates_batch" in extras:
+            raise RuntimeError("simulated crash")
+        return real_commit(self, rnd, extras)
 
+    monkeypatch.setattr(Catalog, "commit", killed_commit)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        eng.ingest_candidates(cand)
+    monkeypatch.undo()
+    eng2 = _engine(spark, data, tmp_path / "wd")
+    assert _committed(spark, tmp_path / "wd") == ALL
+    assert eng2.catalog.extra("ingested_candidates_batch") is None
+    assert eng2.ingest_candidates(cand) == 3
+    assert eng2.ingest_candidates(cand) == 0  # high-water mark holds
+    got = [
+        r["canon"] for r in Catalog(str(tmp_path / "wd"), spark)
+        .read("frontier").filter(F.col("referrer") == "INGESTED").collect()
+    ]
+    assert len(got) == len(set(got)) == 3
+
+
+def test_seed_init_crash_reseeds_on_resume(spark, data, tmp_path):
+    """A kill after _init_frontier stages the seed delta, before the init
+    commit: the store has no committed frontier, so the resumed run
+    re-seeds and crawls instead of stopping at once."""
+    eng = _engine(spark, data, tmp_path / "wd")
+    eng._init_frontier()  # seed delta staged ... and "crash" pre-commit
+    assert _frontier_dirs(tmp_path / "wd")
+    eng2 = _engine(spark, data, tmp_path / "wd")
+    assert not eng2.catalog.exists("frontier")
+    res = eng2.run(max_rounds=1)
+    assert res["visited"] > 0
+
+
+def test_ingest_and_resume(spark, data, tmp_path_factory):
+    """Streaming ingest x resume: captures ingested mid-crawl are crawled
+    after a resume with a FRESH Engine over the same workdir."""
     from crabspark.streaming import start_page_ingest
 
-    tmp = tmp_path_factory.mktemp("bkt_ingest")
+    tmp = tmp_path_factory.mktemp("ingest_resume")
     work = str(tmp / "work")
-    cfg = _cfg(8)
-    eng = Engine(
-        spark, cfg, work,
-        pages_path=f"{data}/pages.parquet",
-        robots_path=f"{data}/robots.parquet",
-    )
+    cfg = _cfg()
+    eng = _engine(spark, data, work, cfg)
     eng.run(max_rounds=2)
     mid_visited = eng.total_visited
 
@@ -256,13 +317,7 @@ def test_bucketed_ingest_and_resume(spark, data, tmp_path_factory):
     q.awaitTermination(120)
     assert eng.ingest_candidates(cand_cat) == 3
 
-    # resume: FRESH engine over the same workdir (bucketed table
-    # re-registered via CREATE TABLE IF NOT EXISTS + recover())
-    eng2 = Engine(
-        spark, cfg, work,
-        pages_path=f"{data}/pages.parquet",
-        robots_path=f"{data}/robots.parquet",
-    )
+    eng2 = _engine(spark, data, work, cfg)
     eng2.pages = eng2.pages.unionByName(
         spark.read.parquet(f"{incoming}/part-0.parquet")
     )
@@ -278,229 +333,95 @@ def test_bucketed_ingest_and_resume(spark, data, tmp_path_factory):
     assert dupes <= {"mega1.com"}, dupes
 
 
-SCHEMA = (
-    "url string, canon string, sha1 string, host string, "
-    "referrer string, priority string, depth int, added_round int"
-)
-
-
-def _baseline(spark, tmp_path):
-    cat = Catalog(str(tmp_path / "wd"), spark)
-    bf = BucketedFrontier(cat, 4)
-    rows = [
-        (f"u{i}", f"c{i}", f"s{i}", f"h{i % 3}.org", "r", f"{i:04d}", 0, 0)
-        for i in range(6)
-    ]
-    bf.insert(spark.createDataFrame(rows, SCHEMA), 0)
-    cat.commit(0)
-    bf.finish_round()
-    return cat, bf
-
-
-# (kill step, op, expected committed-visible state after recover)
+# (kill step, op, expected committed frontier after recovery)
 KILL_MATRIX = [
-    ("insert-intent", "insert", "baseline"),
-    ("insert-done", "insert", "baseline"),
-    ("fold-staged", "fold", "baseline"),  # no intent yet: stage is garbage
-    ("fold-intent", "fold", "folded"),    # intent durable: roll FORWARD
-    ("fold-old-deleted", "fold", "folded"),
-    ("fold-one-moved", "fold", "folded"),
-    ("fold-moved", "fold", "folded"),
+    ("insert-intent", "insert", "baseline"),   # parquet write never runs
+    ("insert-done", "insert", "baseline"),     # delta staged, no commit
+    ("fold-staged", "fold", "baseline"),       # overwrite staged, no commit
+    ("fold-intent", "fold", "folded"),         # manifest committed
+    ("fold-old-deleted", "fold", "folded"),    # GC manifest persisted
+    ("fold-one-moved", "fold", "folded"),      # first superseded dir removed
+    ("fold-moved", "fold", "folded"),          # GC returned
+    ("persist-tmp", "insert", "baseline"),     # manifest tmp not yet renamed
 ]
 
 
+def _kill(monkeypatch, step):
+    """Make ``step`` raise a simulated crash."""
+
+    def crash(*_a, **_k):
+        raise RuntimeError("simulated crash")
+
+    if step == "insert-intent":
+        monkeypatch.setattr(DataFrameWriter, "parquet", crash)
+    elif step in ("insert-done", "fold-staged"):
+        monkeypatch.setattr(Catalog, "commit", crash)
+    elif step == "fold-intent":
+        monkeypatch.setattr(Catalog, "gc_superseded", crash)
+    elif step in ("fold-old-deleted", "fold-one-moved"):
+        real_rmtree = shutil.rmtree
+        removed = []
+
+        def rmtree(path, *a, **k):
+            if step == "fold-one-moved" and not removed:
+                real_rmtree(path, *a, **k)
+                removed.append(path)
+                return
+            crash()
+
+        monkeypatch.setattr(tables.shutil, "rmtree", rmtree)
+    elif step == "fold-moved":
+        real_gc = Catalog.gc_superseded
+
+        def gc_then_crash(self, name):
+            real_gc(self, name)
+            crash()
+
+        monkeypatch.setattr(Catalog, "gc_superseded", gc_then_crash)
+    elif step == "persist-tmp":
+        monkeypatch.setattr(tables.os, "replace", crash)
+
+
 @pytest.mark.parametrize("step,op,expected", KILL_MATRIX)
-def test_crash_matrix_kill_points(spark, tmp_path, step, op, expected):
-    """Kill the process at every mutation step of insert/fold; a fresh
-    catalog + frontier must recover to a deterministic state: exactly the
-    last committed rows (kill before the intent is durable) or exactly
-    the folded set (intent durable: roll forward). VERDICT r3 item 8."""
-    cat, bf = _baseline(spark, tmp_path)
-    folded = [f"c{i}" for i in range(0, 6, 2)]
-    bf._kill_at = step
+def test_crash_matrix_kill_points(
+    spark, data, tmp_path, monkeypatch, step, op, expected
+):
+    """Kill the process at every write, commit and GC step of a frontier
+    append and a fold: a fresh catalog reads exactly the last committed
+    rows (kill before the manifest commit) or exactly the folded rows
+    (kill after it), and the live view is the same either way."""
+    cat = _store(spark, tmp_path / "wd")
+    eng = _engine(spark, data, tmp_path / "wd") if op == "fold" else None
+    child = spark.createDataFrame(_rows(8, 9, 2), FRONTIER_SCHEMA)
+    _kill(monkeypatch, step)
     with pytest.raises(RuntimeError, match="simulated crash"):
         if op == "insert":
-            bf.insert(
-                spark.createDataFrame(
-                    [("u9", "c9", "s9", "z.org", "r", "0009", 1, 1)], SCHEMA
-                ),
-                1,
-            )
+            cat.append("frontier", child, 2)
+            cat.commit(2)
         else:
-            live = bf.read().filter(F.col("canon").isin(folded))
-            bf.replace(live, 1)
-    # resume: fresh objects replay recover()
-    cat2 = Catalog(str(tmp_path / "wd"), spark)
-    bf2 = BucketedFrontier(cat2, 4)
-    got = sorted(r["canon"] for r in bf2.read().collect())
+            eng._fold_frontier(2)
+    monkeypatch.undo()
     if expected == "baseline":
-        assert got == [f"c{i}" for i in range(6)]
+        assert _committed(spark, tmp_path / "wd") == ALL
     else:
-        assert got == folded
-    assert not os.path.exists(bf2.intent_path)
-    assert not os.path.exists(bf2.stage_dir)
+        assert _committed(spark, tmp_path / "wd") == LIVE
+    assert _live(_engine(spark, data, tmp_path / "wd")) == LIVE
 
 
-def test_ingest_guard_rolls_back_unconfirmed_insert(spark, tmp_path):
-    """ADVICE r3 (high): a streaming-ingest insert lands at
-    rnd == committed_round, so the round check alone cannot detect a crash
-    before the paired commit. The guard (stream high-water mark recorded
-    in the intent) must roll it back — and a confirmed insert with the
-    same guard must survive."""
-    cat, bf = _baseline(spark, tmp_path)
-    orphan = spark.createDataFrame(
-        [("u9", "c9", "s9", "z.org", "r", "0009", 0, 0)], SCHEMA
-    )
-    guard = {"key": "ingested_candidates_batch", "value": 5}
-    bf.insert(orphan, 0, guard=guard)  # crash: no commit, no finish_round
-    cat2 = Catalog(str(tmp_path / "wd"), spark)
-    bf2 = BucketedFrontier(cat2, 4)
-    got = sorted(r["canon"] for r in bf2.read().collect())
-    assert got == [f"c{i}" for i in range(6)]  # orphan rolled back
-    # same insert, this time the paired commit confirms the mark
-    bf2.insert(orphan, 0, guard=guard)
-    cat2.commit(0, {"ingested_candidates_batch": 5})
-    bf2.finish_round()
-    cat3 = Catalog(str(tmp_path / "wd"), spark)
-    bf3 = BucketedFrontier(cat3, 4)
-    got = sorted(r["canon"] for r in bf3.read().collect())
-    assert got == [f"c{i}" for i in range(6)] + ["c9"]
-
-
-def test_seed_init_crash_reseeds_on_resume(spark, data, tmp_path_factory):
-    """ADVICE r3 (medium): a crash between the bucketed seed replace()
-    and the init commit leaves physical seed files but no committed
-    'frontier_seeded' extra; run() must re-seed (idempotent) instead of
-    trusting directory contents and silently terminating."""
-    work = str(tmp_path_factory.mktemp("bkt_initcrash"))
-    cfg = _cfg(8)
-    eng = Engine(
-        spark, cfg, work,
-        pages_path=f"{data}/pages.parquet",
-        robots_path=f"{data}/robots.parquet",
-    )
-    eng._init_frontier()  # seed files hit disk... and we "crash" pre-commit
-    assert eng.bucketed_frontier.exists()
-    eng2 = Engine(
-        spark, cfg, work,
-        pages_path=f"{data}/pages.parquet",
-        robots_path=f"{data}/robots.parquet",
-    )
-    res = eng2.run(max_rounds=2)
-    assert res["visited"] > 0  # re-seeded and crawled, not a silent stop
-
-
-def test_auto_bucket_migration_mid_crawl(both, spark, data, tmp_path_factory):
-    """frontier_buckets=0 + auto threshold: the engine must migrate to the
-    bucketed layout mid-crawl once the frontier estimate crosses the
-    threshold, produce the identical visit log / seen set (the layout
-    invariant), stay migrated across a resume, and record the committed
-    extra that makes the migration sticky. VERDICT r3 item 7."""
-    _, log_d, seen_d = both["delta"]
-    work = str(tmp_path_factory.mktemp("work_autobkt"))
-    cfg = _cfg(0)
-    cfg.frontier_auto_buckets = 8
-    cfg.frontier_auto_bucket_threshold = 10  # fixture frontier peaks ~12
-    eng = Engine(
-        spark, cfg, work,
-        pages_path=f"{data}/pages.parquet",
-        robots_path=f"{data}/robots.parquet",
-    )
-    eng.run()
-    assert eng.bucketed_frontier is not None, "migration never triggered"
-    assert eng.catalog.extra("frontier_bucketed_n") == 8
-    h = hashlib.md5()
-    for row in eng.visit_log().select("round", "priority", "url").collect():
-        h.update(f"{row['round']}|{row['priority']}|{row['url']}\n".encode())
-    seen = hashlib.md5(
-        "\n".join(sorted(r["url"] for r in eng.read_seen().collect())).encode()
-    ).hexdigest()
-    assert h.hexdigest() == log_d
-    assert seen == seen_d
-    # resume re-opens the bucketed store from the committed extra, with the
-    # plain config (frontier_buckets=0)
-    eng2 = Engine(
-        spark, _cfg(0), work,
-        pages_path=f"{data}/pages.parquet",
-        robots_path=f"{data}/robots.parquet",
-    )
-    assert eng2.bucketed_frontier is not None
-    assert eng2.total_visited == eng.total_visited
-
-
-def test_mask_size_gate_folds_early(both, spark, data, tmp_path_factory):
-    """ADVICE r3 (medium): the bucketed live-mask broadcast side must stay
-    bounded. With a tiny fetch_broadcast_limit every round crosses the
-    gate, so the engine folds the frontier BEFORE selecting — the crawl
-    must still produce the identical visit log, and the folded-round
-    marker must advance with the crawl instead of staying at the default
-    fold period."""
-    _, log_d, seen_d = both["delta"]
-    work = str(tmp_path_factory.mktemp("work_maskgate"))
-    cfg = _cfg(8)
-    cfg.fetch_broadcast_limit = 4  # bound crossed every round
-    eng = Engine(
-        spark, cfg, work,
-        pages_path=f"{data}/pages.parquet",
-        robots_path=f"{data}/robots.parquet",
-    )
-    eng.run()
-    h = hashlib.md5()
-    for row in eng.visit_log().select("round", "priority", "url").collect():
-        h.update(f"{row['round']}|{row['priority']}|{row['url']}\n".encode())
-    assert h.hexdigest() == log_d
-    seen = hashlib.md5(
-        "\n".join(sorted(r["url"] for r in eng.read_seen().collect())).encode()
-    ).hexdigest()
-    assert seen == seen_d
-    # the early folds kept the mask bound under the limit all crawl long
-    folded = int(eng.catalog.extra("frontier_folded_round", -1))
-    assert folded >= eng.round - 2
-    assert eng._visits_since_fold() <= cfg.fetch_broadcast_limit + 50
-
-
-def test_drain_round_skips_fold_with_identical_output(
-    spark, data, tmp_path_factory
-):
-    """Round-5 perf fix: when the live-mask bound crosses the broadcast
-    gate but the frontier itself is drain-sized, the engine must SKIP the
-    O(live+adds) fold rewrite and let _live_frontier plan the shuffled
-    anti-join instead — the 2M-crawl tail round paid 8-16s of pure fold
-    for a 113k-row select. The crawl must still produce the identical
-    visit log and seen set vs the delta-layout run of the same config,
-    and at least one skip must actually happen (guarding against the
-    condition silently never firing)."""
-
-    def run(buckets, limit):
-        cfg = _cfg(buckets)
-        cfg.per_host_quota = None  # big batches: the bound accumulates
-        if limit:
-            cfg.fetch_broadcast_limit = limit
-        eng = Engine(
-            spark, cfg,
-            str(tmp_path_factory.mktemp(f"work_drainskip{buckets}_{limit}")),
-            pages_path=f"{data}/pages.parquet",
-            robots_path=f"{data}/robots.parquet",
-        )
-        eng.run()
-        h = hashlib.md5()
-        for row in eng.visit_log().select(
-            "round", "priority", "url"
-        ).collect():
-            h.update(
-                f"{row['round']}|{row['priority']}|{row['url']}\n".encode()
-            )
-        seen = hashlib.md5(
-            "\n".join(
-                sorted(r["url"] for r in eng.read_seen().collect())
-            ).encode()
-        ).hexdigest()
-        return eng, h.hexdigest(), seen
-
-    _, log_d, seen_d = run(0, None)  # delta layout, default limit
-    # bound crosses 30 after the crawl's big mid-rounds while the
-    # frontier estimate has drained to <= 30 // 4 rows
-    eng, log_b, seen_b = run(8, 30)
-    assert eng.fold_skips_total >= 1
-    assert log_b == log_d
-    assert seen_b == seen_d
+def test_bucketed_store_is_refused(spark, data, tmp_path):
+    """A store written with the removed host-bucketed frontier layout
+    (its directory, or the auto-migration's committed extra) fails to open
+    with a ValueError naming the store and the way out, instead of
+    stopping at once or re-seeding over its own seen set."""
+    with_dir = tmp_path / "with_dir"
+    _store(spark, with_dir)
+    os.makedirs(with_dir / "frontier_bucketed")
+    with_extra = tmp_path / "with_extra"
+    cat = _store(spark, with_extra)
+    cat.commit(1, {"frontier_bucketed_n": 64})
+    for root in (with_dir, with_extra):
+        with pytest.raises(ValueError, match="fresh workdir") as err:
+            _engine(spark, data, root)
+        assert str(root) in str(err.value)
+    # a fresh workdir opens
+    assert _engine(spark, data, tmp_path / "fresh").round == 0

@@ -265,33 +265,3 @@ def test_ephemeral_store_mode(spark, fixture_paths, tmp_path):
     eng2.run()
     assert {r["url"] for r in eng2.visit_log().select("url").collect()} == visited
     assert not os.path.exists(work)
-
-
-def test_ephemeral_mode_with_bucketed_frontier(spark, fixture_paths, tmp_path):
-    """Ephemeral store + host-bucketed frontier compose: the bucketed
-    layout lives under the temp catalog root (never the caller's
-    workdir) and the crawl result matches the persistent bucketed run."""
-    import os
-
-    cfg = make_cfg(
-        max_urls_to_visit=SMALL_CAP, collect_images=False,
-        scheduling="throughput", per_host_quota=0, sqlite_enabled=False,
-        frontier_buckets=8,
-    )
-    work = str(tmp_path / "never")
-    eng = new_engine(spark, fixture_paths, work, cfg)
-    eng.run()
-    assert not os.path.exists(work)
-    assert eng.bucketed_frontier is not None
-    visited = {r["url"] for r in eng.visit_log().select("url").collect()}
-    assert len(visited) == SMALL_CAP
-
-    cfg_p = make_cfg(
-        max_urls_to_visit=SMALL_CAP, collect_images=False,
-        scheduling="throughput", per_host_quota=0, frontier_buckets=8,
-    )
-    eng_p = new_engine(spark, fixture_paths, str(tmp_path / "p"), cfg_p)
-    eng_p.run()
-    assert visited == {
-        r["url"] for r in eng_p.visit_log().select("url").collect()
-    }

@@ -1,16 +1,26 @@
-"""Every ``crabspark`` module needs a consumer (ROADMAP rule 2).
+"""Every ``crabspark`` module and every ``Config`` knob needs a consumer
+(ROADMAP rule 2).
 
-Walks the ``import`` / ``from ... import`` statements of the entry points —
-the engine, the query registry, streaming, WARC, the ``bin/`` jobs and
-``bench.py`` — with ``ast`` (function-local imports included) and follows
-every import that resolves to a file in this repo. A ``crabspark/*.py``
-module outside that transitive closure is code nothing runs. No Spark.
+Modules: walks the ``import`` / ``from ... import`` statements of the entry
+points — the engine, the query registry, streaming, WARC, the ``bin/`` jobs
+and ``bench.py`` — with ``ast`` (function-local imports included) and
+follows every import that resolves to a file in this repo. A
+``crabspark/*.py`` module outside that transitive closure is code nothing
+runs.
+
+Knobs: every ``Config`` field must be read as an attribute somewhere in
+``crabspark/`` outside ``config.py``, in ``bin/`` or in ``bench.py``; a field
+nothing reads is a knob that changes nothing. The named allow-list holds
+the reference-parity fields that only load. No Spark.
 """
 
 from __future__ import annotations
 
 import ast
+import dataclasses
 from pathlib import Path
+
+from crabspark.config import Config
 
 REPO = Path(__file__).resolve().parent.parent
 ROOTS = [
@@ -76,3 +86,46 @@ def test_every_crabspark_module_has_a_consumer():
         p.name for p in (REPO / "crabspark").glob("*.py") if p not in reached
     )
     assert not orphans, f"crabspark modules nothing imports: {orphans}"
+
+
+# Config fields kept so reference configs load, with nothing to drive
+LOAD_ONLY_FIELDS = {
+    "starting_url": "folded into seeds by Config itself; the engine reads "
+                    "seeds",
+    "max_threads": "the reference's fetch thread count; Spark task slots "
+                   "replace it",
+    "crawler_request_timeout": "the fetch-simulation join has no "
+                               "per-request socket to time out",
+    "crawler_request_delay_ms": "the crawl loop has no per-request sleep; "
+                                "streaming.start_polite_gate takes the "
+                                "delay as its own argument",
+    "sqlite_path": "the store is a snapshot catalog rooted at the workdir, "
+                   "not a sqlite file",
+    "log_relative_paths": "the engine logs no file paths",
+}
+
+
+def _attribute_reads() -> set[str]:
+    files = [
+        p for p in (REPO / "crabspark").glob("*.py") if p.name != "config.py"
+    ]
+    files += sorted((REPO / "bin").glob("*.py")) + [REPO / "bench.py"]
+    reads = set()
+    for path in files:
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if isinstance(node, ast.Attribute) and isinstance(
+                node.ctx, ast.Load
+            ):
+                reads.add(node.attr)
+    return reads
+
+
+def test_every_config_field_has_a_consumer():
+    fields = {f.name for f in dataclasses.fields(Config)}
+    assert set(LOAD_ONLY_FIELDS) <= fields, set(LOAD_ONLY_FIELDS) - fields
+    reads = _attribute_reads()
+    unread = sorted(fields - reads - set(LOAD_ONLY_FIELDS))
+    assert not unread, f"Config fields nothing reads: {unread}"
+    # an allow-listed field that gained a reader leaves the list
+    stale = sorted(set(LOAD_ONLY_FIELDS) & reads)
+    assert not stale, f"allow-listed fields that are now read: {stale}"

@@ -320,9 +320,9 @@ def test_neardup_gate_incremental_dedup(spark, tmp_path):
 
 
 def test_ingest_first_then_run_keeps_roots(spark, tmp_path):
-    """Ingest BEFORE the first run() on a bucketed store: the committed
-    ingested roots must survive run()'s seed-existence check (a re-seed
-    replace() would wipe them) and get crawled."""
+    """Ingest BEFORE the first run(): the committed ingest delta makes the
+    frontier exist, so run() does not seed over it (the seed overwrite
+    would wipe the ingested roots), and the roots get crawled."""
     import pandas as pd
 
     from crabspark.config import Config
@@ -361,7 +361,6 @@ def test_ingest_first_then_run_keeps_roots(spark, tmp_path):
     cfg.scheduling = "throughput"
     cfg.collect_images = False
     cfg.max_urls_to_visit = 50
-    cfg.frontier_buckets = 8
     eng = Engine(
         spark, cfg, str(tmp_path / "work"),
         pages_path=f"{fixture}/pages.parquet",
