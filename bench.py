@@ -52,8 +52,8 @@ def get_spark(cpus: int) -> SparkSession:
         .config(
             "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2"
         )
-        # 16g, not bigger: giant heaps triple per-round floors at local[32]
-        # on this VM (see bench/scaling.py)
+        # 16g, not bigger: giant heaps tripled per-round floors at
+        # local[32] on a 32-core box (BENCH/BASELINE.md, historical)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         # ParallelGC, not the G1 default: G1's concurrent marking/refinement
         # threads starve when Python UDF workers occupy every core through a
@@ -147,9 +147,9 @@ def bench_crawl(spark, n_pages: int) -> dict:
     cfg.max_urls_to_visit = n_pages * 2
     cfg.respect_robots = True
     cfg.collect_images = True
-    # steady-state warm-up (JIT, codegen, python workers, file listings) —
-    # identical to bench/scaling.py's protocol; the cold first round
-    # otherwise costs ~10s of pure JVM/JIT warm-up in the measured number
+    # steady-state warm-up (JIT, codegen, python workers, file listings):
+    # the cold first round otherwise costs ~10s of pure JVM/JIT warm-up in
+    # the measured number
     import copy
 
     warm_cfg = copy.deepcopy(cfg)

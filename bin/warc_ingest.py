@@ -3,15 +3,12 @@ crawl-ready pages snapshot.
 
   spark-submit --py-files crabspark.zip bin/warc_ingest.py \
       --warcs <dir of .warc[.gz] / .warc.wet[.gz]> \
-      --out <pages parquet dir> [--buckets 64]
+      --out <pages parquet dir>
 
 The first hop for a user pointing this engine at real Common-Crawl data:
 archives are parsed executor-side (one task per archive — a CC snapshot's
-64-90k files out-fan any fleet), written as the input_hint pages table,
-and optionally rewritten into the url-hash-bucketed layout the engine's
-bucket-pruned fetch join wants (`--buckets`, same rewrite the crawl would
-otherwise auto-migrate to at 10^6 frontier estimate). Crawl parity over
-ingested archives is pinned by tests/test_warc.py.
+64-90k files out-fan any fleet) and written as the input_hint pages table.
+Crawl parity over ingested archives is pinned by tests/test_warc.py.
 """
 
 from __future__ import annotations
@@ -29,9 +26,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--warcs", required=True)
     ap.add_argument("--out", required=True)
-    ap.add_argument("--buckets", type=int, default=0,
-                    help="also write the url-hash-bucketed layout "
-                         "(<out>_bucketed) with this many buckets")
     args = ap.parse_args()
 
     spark = (
@@ -47,14 +41,6 @@ def main() -> None:
     n = spark.read.parquet(args.out).count()
     report = {"pages": n, "out": args.out,
               "ingest_s": round(time.monotonic() - t0, 1)}
-    if args.buckets:
-        from crabspark.tables import bucketize_pages
-
-        t1 = time.monotonic()
-        bucketize_pages(spark, args.out, args.out + "_bucketed",
-                        n_buckets=args.buckets)
-        report["bucketed"] = args.out + "_bucketed"
-        report["bucketize_s"] = round(time.monotonic() - t1, 1)
     print(json.dumps(report))
 
 

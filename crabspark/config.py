@@ -10,10 +10,11 @@ Rebuild-only fields extend the reference for the distributed engine:
 ``scheduling`` ('dfs-parity' reproduces the sequential reference order,
 'throughput' is the benchmarked BSP mode), ``max_depth``, ``per_host_quota``,
 ``salt_buckets``, ``seeds`` (the reference has a single starting_url), the
-bloom sizing, the fetch-join strategy, the frontier fold period and the
-Arrow batch size. The frontier has one layout (the adds-only delta chain),
-so no field picks one; a config file that still sets a removed
-frontier-layout key loads with it ignored, like any unknown key.
+bloom sizing, the fetch-join broadcast limit, the frontier fold period and
+the Arrow batch size. The frontier has one layout (the adds-only delta
+chain) and the fetch join one rule, so no field picks either; a config
+file that still sets a removed key (a frontier layout, ``fetch_join``)
+loads with it ignored, like any unknown key.
 """
 
 from __future__ import annotations
@@ -109,11 +110,10 @@ class Config:
     salt_buckets: int = 8  # salt fan-out for host-skew mitigation
     bloom_capacity: int = 1_000_000  # expected seen-set size per bloom epoch
     bloom_fpp: float = 0.01
-    # fetch join strategy: 'auto' broadcasts the round batch into the pages
-    # scan only while it fits (<= fetch_broadcast_limit rows), else falls
-    # back to a shuffle-hash join (batch side builds) — a 10^8-row batch
-    # must never be broadcast; 'broadcast'/'shuffle' force a mode.
-    fetch_join: str = "auto"
+    # the fetch join broadcasts the round batch into the pages scan only
+    # while it fits (<= fetch_broadcast_limit rows), else falls back to a
+    # shuffle-hash join (batch side builds) — a 10^8-row batch must never
+    # be broadcast
     fetch_broadcast_limit: int = 1_000_000
     # fold the adds-only frontier (physically drop visited rows) once the
     # delta chain grows past this many files — amortized O(live) rewrite
@@ -128,11 +128,6 @@ class Config:
     def __post_init__(self) -> None:
         if not self.seeds:
             self.seeds = [self.starting_url]
-        if self.fetch_join not in ("auto", "broadcast", "shuffle"):
-            raise ValueError(
-                f"fetch_join must be one of auto/broadcast/shuffle, "
-                f"got {self.fetch_join!r}"
-            )
         if self.scheduling not in ("dfs-parity", "throughput"):
             raise ValueError(
                 f"scheduling must be one of dfs-parity/throughput, "

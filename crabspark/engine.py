@@ -5,11 +5,11 @@ Each round is the distributed form of one reference recursion layer
 
   frontier --select_batch--> visit batch (politeness rank + cap trim, F6)
     -> visited_ops 'visit' rows (MERGE-equivalent upsert log, S6)
-    -> fetch-simulation join against the pages table (J1): small batches
-       broadcast INTO the pages scan (the 100-TB side streams, never
-       shuffles); batches past cfg.fetch_broadcast_limit switch to a
-       shuffle-hash join with the batch as build side; misses are fetch
-       failures (Q4)
+    -> fetch-simulation join against the pages table (J1), one plain scan:
+       a batch of at most cfg.fetch_broadcast_limit rows is broadcast INTO
+       the pages scan (the 100-TB side streams, never shuffles), a larger
+       one is the build side of a shuffle-hash join (the no-assets image
+       join follows the same rule); misses are fetch failures (Q4)
     -> extract_links UDF -> posexplode (E2/E3) -> fused resolve/validate/
        canonicalize/sha1 UDF (C1/C2/F1-F4)
     -> first-observer dedup (U1/U2) -> bloom + anti-join seen filter (J2)
@@ -43,6 +43,10 @@ Scale design notes (10^10 frontier):
   test fixture); a shuffle-hash fetch join spreads by url hash instead. A
   url_sha1 repartition of the work stages was tried and was not
   faster. The politeness quota bounds any host's share per round;
+- pages has one layout. A url-hash-bucketed layout that pruned the fetch
+  scan to the batch's buckets was built and removed: a batch of B >= 4n
+  URLs hits over 98% of n buckets (1 - (1 - 1/n)^B), so the rounds that
+  hold nearly all the visits scanned every bucket, and it was not faster;
 - every count the loop needs is computed in one aggregate job per round.
 
 Resume: the catalog manifest names the last committed round; an interrupted
@@ -155,18 +159,6 @@ class Engine:
             self.assets = (
                 spark.read.parquet(assets_path) if assets_path else None
             )
-        # url-hash-bucketed pages layout (tables.bucketize_pages): the
-        # fetch join prunes the scan to the batch's bucket partitions
-        self.pages_buckets: int | None = None
-        try:
-            import json as _json
-
-            with open(
-                os.path.join(pages_path, "_crabspark_buckets.json")
-            ) as f:
-                self.pages_buckets = int(_json.load(f)["n_buckets"])
-        except (OSError, ValueError, KeyError, TypeError):
-            self.pages_buckets = None
         self._extract_page = udfs.extract_page_udf()
         self._trim_body = udfs.trim_body_udf()
         self._resolve = udfs.resolve_full_udf(
@@ -190,7 +182,7 @@ class Engine:
         # measurement-only: per-round (select, pipeline, write+commit)
         # wall splits for this PROCESS's rounds (not persisted; resumes
         # start empty) — bench.py and perfbench/workloads.py sum them into
-        # their crawl breakdowns, bench/scaling.py exports them per round
+        # their crawl breakdowns
         self.phase_splits: list[dict] = []
 
         self.round = self.catalog.committed_round + 1
@@ -211,7 +203,7 @@ class Engine:
             with job_label(spark, "init"):
                 self.catalog.overwrite(
                     "seen", self._empty("url string, sha1 string, round int"),
-                    self.round,
+                    self.round - 1,
                 )
                 self.total_visited = 0
                 self._init_frontier()
@@ -232,6 +224,14 @@ class Engine:
 
     def _empty(self, schema: str) -> DataFrame:
         return self.spark.createDataFrame([], schema)
+
+    def _small_side(self, rows: int):
+        """The join rule for a small side joined into the pages scan:
+        broadcast it while it has at most ``fetch_broadcast_limit`` rows,
+        else hint a shuffle-hash join with it as the build side."""
+        if rows <= self.cfg.fetch_broadcast_limit:
+            return F.broadcast
+        return lambda d: d.hint("shuffle_hash")
 
     def _job_counter(self) -> int:
         """Monotone count of Spark jobs submitted so far — the per-round
@@ -329,7 +329,9 @@ class Engine:
                 )
             )
         seeds_df = self.spark.createDataFrame(rows, FRONTIER_SCHEMA)
-        self.catalog.overwrite("frontier", seeds_df, self.round)
+        # staged at the round the init commit publishes: an ingest before
+        # the first round appends at that round too, never below it
+        self.catalog.overwrite("frontier", seeds_df, self.round - 1)
         self.frontier_size = len(rows)
         self._queued_seeds = set(seen_canons)
 
@@ -415,19 +417,11 @@ class Engine:
         # lineage — every downstream job (fetch join, visit rows) reuses the
         # materialized rows instead of re-running the frontier rank. The
         # checkpoint job CARRIES this round's batch-side scalars as observed
-        # metrics (count, fetch-join bucket ids, queued-seed hits) — zero
-        # extra jobs for any of them.
+        # metrics (count, queued-seed hits) — zero extra jobs for either.
         from pyspark.sql import Observation
 
         batch_obs = Observation(f"batch-{r}")
         obs_exprs = [F.count(F.lit(1)).alias("n")]
-        if self.pages_buckets:
-            obs_exprs.append(
-                F.collect_set(
-                    F.pmod(F.xxhash64("url"), F.lit(self.pages_buckets))
-                    .cast("int")
-                ).alias("buckets")
-            )
         if self._queued_seeds:
             obs_exprs.append(
                 F.collect_set(
@@ -478,30 +472,10 @@ class Engine:
         # as build side — a 10^8-row round batch must never be broadcast.
         # The fused page UDF then moves each html binary across Arrow
         # exactly once, and only text/links survive ---
-        join_mode = cfg.fetch_join
-        if join_mode == "auto":
-            join_mode = (
-                "broadcast" if batch_n <= cfg.fetch_broadcast_limit
-                else "shuffle"
-            )
-        small_side = (
-            F.broadcast if join_mode == "broadcast"
-            else (lambda d: d.hint("shuffle_hash"))
-        )
-        # SPJ-style bucket pruning: with a url-bucketed pages layout, scan
-        # only the partitions the batch can hit (<= n_buckets ids, observed
-        # for free on the batch-checkpoint job — O(buckets) driver state,
-        # never O(rows)). A small batch then reads a small fraction of the
-        # 100-TB table; a huge batch's shuffle-hash join runs over pruned
-        # input.
-        pages_src = self.pages
-        if self.pages_buckets:
-            bids = [int(b) for b in (bstats.get("buckets") or [])]
-            pages_src = self.pages.filter(F.col("bucket").isin(bids))
         hits = (
-            pages_src.select("url", "html")
+            self.pages.select("url", "html")
             .join(
-                small_side(
+                self._small_side(batch_n)(
                     batch.select(
                         F.col("url"), F.col("canon").alias("p_canon"),
                         F.col("priority").alias("p_priority"),
@@ -683,24 +657,6 @@ class Engine:
                     )
                 ).alias("seed_canons")
             )
-        # the no-assets image join prunes the pages scan to the image
-        # candidates' buckets — ids ride this same job
-        need_img_buckets = (
-            cfg.collect_images
-            and self.assets is None
-            and bool(self.pages_buckets)
-        )
-        if need_img_buckets:
-            agg_exprs.append(
-                F.collect_set(
-                    F.when(
-                        img_ok,
-                        F.pmod(
-                            F.xxhash64("ser"), F.lit(self.pages_buckets)
-                        ).cast("int"),
-                    )
-                ).alias("img_buckets")
-            )
         jstats = (
             judged.groupBy(F.spark_partition_id().alias("partition_id"))
             .agg(*agg_exprs)
@@ -730,11 +686,6 @@ class Engine:
         if self._all_seed_canons:
             for row in part_stats:
                 requeued.update(row["seed_canons"] or [])
-        img_bids = None
-        if need_img_buckets:
-            img_bids = sorted(
-                {int(b) for row in part_stats for b in (row["img_buckets"] or [])}
-            )
         t_judged = time.monotonic()
         sc.setJobDescription(f"round {r}: write")
 
@@ -795,30 +746,14 @@ class Engine:
                     )
                 )
             else:
-                # presence-in-pages fallback mirrors the fetch join: prune
-                # the pages scan to the image candidates' buckets (ids rode
-                # the stats job) and size the join mode from the IMAGE
-                # candidate count, not the batch count
-                img_pages = self.pages
-                if img_bids is not None:
-                    img_pages = img_pages.filter(
-                        F.col("bucket").isin(img_bids)
-                    )
-                img_join_mode = cfg.fetch_join
-                if img_join_mode == "auto":
-                    img_join_mode = (
-                        "broadcast"
-                        if stats["img_n"] <= cfg.fetch_broadcast_limit
-                        else "shuffle"
-                    )
-                img_small_side = (
-                    F.broadcast if img_join_mode == "broadcast"
-                    else (lambda d: d.hint("shuffle_hash"))
-                )
+                # presence-in-pages fallback mirrors the fetch join, sized
+                # from the IMAGE candidate count, not the batch count
                 img_hit = (
-                    img_pages.select(F.col("url").alias("url_ser"))
+                    self.pages.select(F.col("url").alias("url_ser"))
                     .join(
-                        img_small_side(img_rows.select("url_ser")),
+                        self._small_side(stats["img_n"])(
+                            img_rows.select("url_ser")
+                        ),
                         "url_ser", "inner",
                     )
                     .withColumn("success", F.lit(True))

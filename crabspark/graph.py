@@ -33,8 +33,8 @@ _CHECKPOINT_EVERY = 8
 # 2 = 20.9s — the extra recompute between cuts costs more than the saved
 # job barrier, so cut EVERY iteration (the Pregel superstep contract,
 # same as hits_scores). Note the absolute win over the old lazy chain:
-# the leak variant with every-8 cuts ran the same bench in 103.5s; see
-# BENCH/graph_scale.json.
+# the leak variant with every-8 cuts ran the same bench in 103.5s
+# (BENCH/graph_scale.json, historical: its script has been removed).
 _REDIST_CHECKPOINT_EVERY = 1
 
 

@@ -159,23 +159,32 @@ class Catalog:
         committed_round is monotone: a concurrent producer (e.g. the
         streaming ingest) can never regress the engine's round pointer."""
         with self._lock:
+            # Per-table round monotonicity: read_at/snapshots assume each
+            # table's delta list is ordered by round, which holds only if
+            # every producer appending to a GIVEN table advances one shared
+            # counter (engine rounds and streaming batch ids are independent
+            # counters, so they must not share a table — and don't; this
+            # guard turns a silent non-prefix time-travel reconstruction
+            # into a loud error). Every pending delta is checked before any
+            # state changes, so a refused commit publishes none of them,
+            # now or at a later commit.
+            last = {
+                name: tbl["deltas"][-1]["round"]
+                for name, tbl in self.state["tables"].items()
+                if tbl["deltas"]
+            }
             for name, delta in self._pending:
-                tbl = self.state["tables"].setdefault(name, {"deltas": []})
-                # Per-table round monotonicity: read_at/snapshots assume each
-                # table's delta list is ordered by round, which holds only if
-                # every producer appending to a GIVEN table advances one
-                # shared counter (engine rounds and streaming batch ids are
-                # independent counters, so they must not share a table —
-                # and don't; this guard turns a silent non-prefix
-                # time-travel reconstruction into a loud error).
-                if tbl["deltas"] and delta["round"] < tbl["deltas"][-1]["round"]:
+                if name in last and delta["round"] < last[name]:
                     raise RuntimeError(
                         f"non-monotone delta round for table {name!r}: "
                         f"staging round {delta['round']} after committed "
-                        f"round {tbl['deltas'][-1]['round']} — each table "
+                        f"round {last[name]} — each table "
                         "requires a single monotone round counter (did two "
                         "producers with independent counters share it?)"
                     )
+                last[name] = delta["round"]
+            for name, delta in self._pending:
+                tbl = self.state["tables"].setdefault(name, {"deltas": []})
                 tbl["deltas"].append(delta)
             self._pending.clear()
             self.state["committed_round"] = max(
@@ -303,30 +312,3 @@ class Catalog:
     def extra(self, key: str, default=None):
         return self.state["extras"].get(key, default)
 
-
-def bucketize_pages(
-    spark, src_path: str, dest_path: str, n_buckets: int = 64
-) -> None:
-    """One-time rewrite of a pages snapshot hash-bucketed by url
-    (``bucket = pmod(xxhash64(url), n)`` partition directories) — the
-    storage-partitioned-join layout for the fetch join: a round first
-    collects its batch's bucket ids (<= n_buckets ints) and scans ONLY
-    those partitions, so a small batch reads a small fraction of a 100-TB
-    pages table instead of all of it, and a huge batch's shuffle-hash
-    join runs over pruned input. The Iceberg/SPJ analogue without a
-    bucketing metastore: partition pruning does the work."""
-    from pyspark.sql import functions as F
-
-    df = spark.read.parquet(src_path)
-    (
-        df.withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"),
-        )
-        .repartition(n_buckets, "bucket")
-        .write.partitionBy("bucket")
-        .mode("overwrite")
-        .parquet(dest_path)
-    )
-    with open(os.path.join(dest_path, "_crabspark_buckets.json"), "w") as f:
-        json.dump({"n_buckets": int(n_buckets)}, f)

@@ -13,6 +13,8 @@ rows or the folded rows, never a mix. Checked here:
   superseded directories, and a kill after its commit reads the folded set;
 - a kill inside ``ingest_candidates`` or between the seed write and the
   init commit rolls back cleanly, and the retry queues each row once;
+- an ingest right after the seed init (or a ``fresh_seen`` re-seed),
+  before any round, commits;
 - the crash matrix: a kill at every write, commit and GC step of a
   frontier append and a fold;
 - a store written with the removed host-bucketed layout is refused.
@@ -283,6 +285,29 @@ def test_seed_init_crash_reseeds_on_resume(spark, data, tmp_path):
     assert not eng2.catalog.exists("frontier")
     res = eng2.run(max_rounds=1)
     assert res["visited"] > 0
+
+
+@pytest.mark.parametrize("rounds", [0, 1], ids=["seeded", "fresh-seen"])
+def test_ingest_before_first_round(spark, data, tmp_path, rounds):
+    """An ingest on a store whose frontier was just seeded, by a
+    ``run(max_rounds=0)`` or by a ``fresh_seen`` open after a crawled
+    round, appends at the round the seed init committed: the seed deltas
+    are staged at that round too, so the ingest commits."""
+    eng = _engine(spark, data, tmp_path / "wd")
+    eng.run(max_rounds=rounds)
+    if rounds:
+        eng = Engine(
+            spark, _cfg(), str(tmp_path / "wd"),
+            pages_path=f"{data}/pages.parquet",
+            robots_path=f"{data}/robots.parquet",
+            fresh_seen=True,
+        )
+    cand = _candidates(
+        spark, tmp_path / "cand", ["https://isle.example/p0.html"]
+    )
+    assert eng.ingest_candidates(cand) == 1
+    live = _live(eng)
+    assert "isle.example/p0.html" in live and len(live) == 2
 
 
 def test_ingest_and_resume(spark, data, tmp_path_factory):

@@ -37,12 +37,12 @@ def cfg_with(**over):
     return cfg
 
 
-def compare(spark, fixture_paths, tmp_path, cfg, name):
+def compare(spark, fixture_paths, tmp_path, cfg, name, pages_path=None):
     data = gen_pages.generate(n_pages=N_PAGES, seed=42)
     golden = run_oracle(data["pages"], data["robots"], cfg)
     eng = Engine(
         spark, cfg, str(tmp_path / name),
-        pages_path=f"{fixture_paths}/pages.parquet",
+        pages_path=pages_path or f"{fixture_paths}/pages.parquet",
         robots_path=f"{fixture_paths}/robots.parquet",
     )
     eng.run()
@@ -82,9 +82,10 @@ def test_robots_off(spark, fixture_paths, tmp_path):
 
 
 def test_shuffle_fetch_join(spark, fixture_paths, tmp_path):
-    """fetch_join='shuffle': identical crawl through the non-broadcast
-    (shuffle-hash) fetch-join path — the 10^8-row-batch scale mode."""
-    cfg = cfg_with(free_crawl=True, fetch_join="shuffle")
+    """fetch_broadcast_limit=0: every batch is past the broadcast limit,
+    so the crawl runs the shuffle-hash fetch join — the 10^8-row-batch
+    scale mode — with identical output."""
+    cfg = cfg_with(free_crawl=True, fetch_broadcast_limit=0)
     compare(spark, fixture_paths, tmp_path, cfg, "shufflejoin")
 
 
@@ -132,37 +133,23 @@ def test_ua_not_rotating(spark, fixture_paths, tmp_path):
 
 
 def test_bucketed_pages_fetch_join(spark, fixture_paths, tmp_path):
-    """url-hash-bucketed pages layout: the fetch join prunes the scan to
-    the batch's bucket partitions (SPJ-style); crawl results identical."""
+    """A pages snapshot in the removed url-hash-bucketed layout (``bucket=``
+    partition directories plus its ``_crabspark_buckets.json`` marker)
+    still loads, as ordinary partitioned parquet read by the one plain
+    fetch scan: crawl results identical to the oracle."""
     from pyspark.sql import functions as F
 
-    from crabspark.tables import bucketize_pages
-
     bdir = str(tmp_path / "pages_bucketed")
-    bucketize_pages(spark, f"{fixture_paths}/pages.parquet", bdir, n_buckets=8)
-    cfg = cfg_with(free_crawl=True)
-    data = gen_pages.generate(n_pages=N_PAGES, seed=42)
-    golden = run_oracle(data["pages"], data["robots"], cfg)
-    eng = Engine(
-        spark, cfg, str(tmp_path / "bucketed"),
-        pages_path=bdir,
-        robots_path=f"{fixture_paths}/robots.parquet",
+    (
+        spark.read.parquet(f"{fixture_paths}/pages.parquet")
+        .withColumn("bucket", F.pmod(F.xxhash64("url"), F.lit(8)).cast("int"))
+        .write.partitionBy("bucket")
+        .parquet(bdir)
     )
-    assert eng.pages_buckets == 8
-    # partition pruning is visible in the physical plan: the bucket
-    # filter lands in PartitionFilters, so only that partition's files
-    # are scanned
-    one = eng.pages.filter(F.col("bucket").isin([3])).select("url")
-    plan = one._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "bucket" in plan
-    eng.run()
-    vis = {r["url"]: r for r in eng.read_visited().collect()}
-    assert set(vis) == set(golden.visited)
-    for url, row in golden.visited.items():
-        assert vis[url]["is_blocked"] == row["is_blocked"], url
-        assert vis[url]["is_complete"] == row["is_complete"], url
-    seen = {r["url"] for r in eng.read_seen().collect()}
-    assert seen == golden.seen
+    with open(os.path.join(bdir, "_crabspark_buckets.json"), "w") as f:
+        f.write('{"n_buckets": 8}')
+    cfg = cfg_with(free_crawl=True)
+    compare(spark, fixture_paths, tmp_path, cfg, "bucketed", pages_path=bdir)
 
 
 def test_cuckoo_seen_filter_identical_output(spark, fixture_paths, tmp_path):

@@ -1,7 +1,7 @@
 """Hardening fixes from the round-2 advisor review:
 
-- config enum validation (a typo'd fetch_join must error, not silently
-  fall into the shuffle branch);
+- config enum validation (a typo'd scheduling must error, also through
+  the JSON overlay, not silently fall into another mode);
 - catalog manifest format-version gate (resuming an old-format workdir
   fails fast with a clear message, not mid-round);
 - ship-zip cache poisoning resistance (a pre-planted zip at the predictable
@@ -24,15 +24,6 @@ from crabspark.config import Config
 from crabspark.tables import Catalog
 
 
-def test_fetch_join_typo_raises():
-    with pytest.raises(ValueError, match="fetch_join"):
-        Config(fetch_join="bcast")
-    with pytest.raises(ValueError, match="fetch_join"):
-        Config(fetch_join="Broadcast")
-    for ok in ("auto", "broadcast", "shuffle"):
-        assert Config(fetch_join=ok).fetch_join == ok
-
-
 def test_scheduling_typo_raises():
     with pytest.raises(ValueError, match="scheduling"):
         Config(scheduling="bfs")
@@ -40,8 +31,8 @@ def test_scheduling_typo_raises():
 
 def test_config_overlay_revalidates(tmp_path):
     p = tmp_path / "cfg.json"
-    p.write_text(json.dumps({"fetch_join": "bcast"}))
-    with pytest.raises(ValueError, match="fetch_join"):
+    p.write_text(json.dumps({"scheduling": "bfs"}))
+    with pytest.raises(ValueError, match="scheduling"):
         Config.new(str(p))
 
 

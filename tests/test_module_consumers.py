@@ -11,7 +11,11 @@ runs.
 Knobs: every ``Config`` field must be read as an attribute somewhere in
 ``crabspark/`` outside ``config.py``, in ``bin/`` or in ``bench.py``; a field
 nothing reads is a knob that changes nothing. The named allow-list holds
-the reference-parity fields that only load. No Spark.
+the reference-parity fields that only load.
+
+Bench scripts: every ``bench/*.py`` must be named by its path in a test or
+a ``perfbench/`` file, or sit on a named allow-list with the reason it
+stays; a script nothing runs goes. No Spark.
 """
 
 from __future__ import annotations
@@ -129,3 +133,33 @@ def test_every_config_field_has_a_consumer():
     # an allow-listed field that gained a reader leaves the list
     stale = sorted(set(LOAD_ONLY_FIELDS) & reads)
     assert not stale, f"allow-listed fields that are now read: {stale}"
+
+
+# bench scripts no test or perfbench file names, with the reason each stays
+BENCH_ALLOW_LIST = {
+    "frontier_curve.py": "the bloom keep-or-delete decision (ROADMAP item "
+                         "4) is a run of it at 120k pages",
+}
+
+
+def _bench_mentions() -> str:
+    files = [
+        p for p in (REPO / "tests").glob("*.py")
+        if p.name != Path(__file__).name  # the allow-list names its keys
+    ]
+    files += [
+        p for p in (REPO / "perfbench").rglob("*")
+        if p.is_file() and p.suffix in (".py", ".md")
+    ]
+    return "\n".join(p.read_text() for p in files)
+
+
+def test_every_bench_script_has_a_consumer():
+    scripts = {p.name for p in (REPO / "bench").glob("*.py")}
+    text = _bench_mentions()
+    named = {s for s in scripts if f"bench/{s}" in text}
+    orphans = sorted(scripts - named - set(BENCH_ALLOW_LIST))
+    assert not orphans, f"bench scripts nothing names: {orphans}"
+    # an allow-listed script that is gone, or now named, leaves the list
+    stale = sorted(set(BENCH_ALLOW_LIST) - (scripts - named))
+    assert not stale, f"stale bench allow-list entries: {stale}"

@@ -123,3 +123,25 @@ def test_snapshots_accumulate_over_appends(spark, tmp_path):
         cat.commit(r)
     assert cat.snapshots("t") == [0, 1, 2]
     assert {x["k"] for x in cat.read_at("t", 1).collect()} == {"r0", "r1"}
+
+
+def test_refused_commit_publishes_nothing(tmp_path):
+    """A commit that fails the monotone-round check changes no state: after
+    abort(), a later commit on the same Catalog publishes none of the
+    refused deltas. No Spark: driver-local deltas only."""
+    import pyarrow as pa
+
+    root = str(tmp_path / "c")
+    rows = pa.table({"k": ["x"]})
+    cat = Catalog(root, None)
+    cat.append_local("b", rows, 5)
+    cat.commit(5)
+    cat.append_local("a", rows, 6)
+    cat.append_local("b", rows, 4)
+    with pytest.raises(RuntimeError, match="non-monotone"):
+        cat.commit(6)
+    cat.abort()
+    cat.commit(7)
+    fresh = Catalog(root, None)
+    assert fresh.delta_count("a") == 0
+    assert [d["round"] for d in fresh.state["tables"]["b"]["deltas"]] == [5]
