@@ -10,11 +10,12 @@ Rebuild-only fields extend the reference for the distributed engine:
 ``scheduling`` ('dfs-parity' reproduces the sequential reference order,
 'throughput' is the benchmarked BSP mode), ``max_depth``, ``per_host_quota``,
 ``salt_buckets``, ``seeds`` (the reference has a single starting_url), the
-bloom sizing, the fetch-join broadcast limit, the frontier fold period and
-the Arrow batch size. The frontier has one layout (the adds-only delta
-chain) and the fetch join one rule, so no field picks either; a config
-file that still sets a removed key (a frontier layout, ``fetch_join``)
-loads with it ignored, like any unknown key.
+bloom sizing, the fetch-join broadcast limit and the Arrow batch size.
+The frontier has one layout (the adds-only delta chain), the fetch join
+one rule, and every table one compaction threshold
+(``tables.COMPACT_DELTAS``), so no field picks any of them; a config file
+that still sets a removed key (a frontier layout, ``fetch_join``, a
+frontier fold threshold) loads with it ignored, like any unknown key.
 """
 
 from __future__ import annotations
@@ -115,9 +116,6 @@ class Config:
     # shuffle-hash join (batch side builds) — a 10^8-row batch must never
     # be broadcast
     fetch_broadcast_limit: int = 1_000_000
-    # fold the adds-only frontier (physically drop visited rows) once the
-    # delta chain grows past this many files — amortized O(live) rewrite
-    frontier_fold_deltas: int = 16
     # Arrow batch rows for the pandas-UDF stages. html blobs are multi-KB,
     # so Spark's default 10k-row batches balloon to 100+ MB of Python-side
     # objects per concurrent worker; with 32 workers the extract stage

@@ -27,7 +27,9 @@ Scale design notes (10^10 frontier):
 - per-round WRITES are O(batch + children): the frontier is adds-only;
   visited rows are masked at read time (visit-round vs added-round join
   over only the rounds since the last fold) and physically dropped by the
-  periodic fold — never an O(frontier) rewrite inside a round;
+  fold, the frontier's ``Catalog.compact`` once its chain passes
+  ``tables.COMPACT_DELTAS`` deltas — never an O(frontier) rewrite inside
+  a round;
 - the per-round O(frontier) that remains is the scheduling SCAN
   (per-host politeness rank needs every host's minimum); on a real cluster
   the frontier table would be bucketed by host so that rank is
@@ -185,7 +187,6 @@ class Engine:
         # their crawl breakdowns
         self.phase_splits: list[dict] = []
 
-        self.round = self.catalog.committed_round + 1
         self.total_visited = int(self.catalog.extra("total_visited", 0))
         # driver-side frontier-size estimate (None = unknown -> always trim)
         fs = self.catalog.extra("frontier_size")
@@ -213,6 +214,11 @@ class Engine:
                      "queued_seeds": sorted(self._queued_seeds),
                      "frontier_folded_round": self.round - 1},
                 )
+
+    @property
+    def round(self) -> int:
+        """The next round to crawl, in process as after a reopen."""
+        return self.catalog.committed_round + 1
 
     # ------------------------------------------------------------------
     def _debug_log(self, msg: str) -> None:
@@ -904,16 +910,14 @@ class Engine:
             f"jobs {self._job_counter() - jobs0})"
         )
         sc.setJobDescription(f"round {r}: post-commit")
-        # keep merge-on-read cost flat: fold long delta chains periodically
-        # (the Iceberg rewrite_data_files analogue)
-        for t in ("visited_ops", "seen", "edges", "fetched", "metrics", "images"):
-            if self.catalog.delta_count(t) > 16:
+        # keep merge-on-read cost flat: compact every long delta chain (the
+        # Iceberg rewrite_data_files analogue); the frontier's compaction
+        # also drops its visited rows
+        for t in self.catalog.long_chains():
+            if t == "frontier":
+                self._fold_frontier(r)
+            else:
                 self.catalog.compact(t, r)
-        if (
-            self.catalog.delta_count("frontier")
-            > self.cfg.frontier_fold_deltas
-        ):
-            self._fold_frontier(r)
         # disk GC: bloom snapshots strictly older than the one the manifest
         # references (rounds may skip bloom writes, so "r - 2" is not safe)
         ref_bloom = self.catalog.extra("bloom")
@@ -928,7 +932,6 @@ class Engine:
                         os.remove(p)
                     except OSError:
                         pass
-        self.round = r + 1
         return True
 
     # ------------------------------------------------------------------
@@ -962,16 +965,14 @@ class Engine:
         )
 
     def _fold_frontier(self, r: int) -> None:
-        """Physically drop visited rows and fold the delta chain to one
-        file set — the amortized O(live) rewrite (every
-        ``frontier_fold_deltas`` rounds) that replaces the old
+        """Compact the frontier to its live rows, physically dropping the
+        visited ones — the amortized O(live) rewrite, run once the chain
+        passes ``tables.COMPACT_DELTAS``, that replaces an
         O(frontier)-per-round overwrite."""
         live = self._live_frontier(self.catalog.read("visited_ops"))
         if live is None:
             return
-        self.catalog.overwrite("frontier", live, r)
-        self.catalog.commit(r, {"frontier_folded_round": r})
-        self.catalog.gc_superseded("frontier")
+        self.catalog.compact("frontier", r, live, {"frontier_folded_round": r})
 
     # ------------------------------------------------------------------
     def ingest_candidates(self, cand_catalog) -> int:

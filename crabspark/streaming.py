@@ -6,7 +6,7 @@ incremental streaming model. What IS a stream in a production crawl is the
 *input*: new Common-Crawl-style page captures landing as parquet files.
 This module tails such a directory with ``readStream`` and, per
 micro-batch (``foreachBatch`` = exactly-once via the catalog's atomic
-commit), appends the new captures as seed candidates:
+commit, ``_exactly_once``), appends the new captures as seed candidates:
 
   new pages -> canonicalize/hash (same kernels as the engine)
             -> candidates(url, canon, sha1, host, discovered_batch)
@@ -28,6 +28,67 @@ from pyspark.sql import functions as F
 from crabspark import urlkit
 from crabspark.shipping import ship_package
 from crabspark.tables import Catalog
+from crabspark.warc import PAGES_SCHEMA
+
+
+def _tail(spark: SparkSession, schema: str, src_dir: str, files: int = 8):
+    """A stream of the parquet files landing in ``src_dir``, at most
+    ``files`` of them per micro-batch."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", files)
+        .parquet(src_dir)
+    )
+
+
+def _exactly_once(catalog: Catalog, mark: str, body):
+    """The ``foreachBatch`` function every catalog sink shares.
+    ``body(batch_df, batch_id, append)`` stages rows with
+    ``append(table, df)``; one atomic commit publishes them with
+    ``batch_id`` as the high-water mark in the manifest extra ``mark``;
+    then each table written whose chain has grown long is compacted, so
+    a store's read cost grows with its rows, not its batches."""
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        bid = int(batch_id)
+        # Abort-at-entry: a batch of ANY sink on this Catalog that failed
+        # before its commit left its deltas staged; the retried batch would
+        # stage its own ON TOP and one commit would publish both,
+        # duplicating rows. Sinks on one catalog run one at a time, so
+        # dropping stale staged state here is safe.
+        catalog.abort()
+        # Replay guard: a crash between the commit and Spark's checkpoint
+        # write replays the batch id, so ids at or below the high-water
+        # mark are skipped. (Ids are monotone within one checkpoint
+        # location; a fresh checkpoint dir requires a fresh catalog.)
+        if bid <= int(catalog.extra(mark, -1)):
+            return
+        wrote = set()
+
+        def append(name: str, df: DataFrame) -> None:
+            catalog.append(name, df, bid)
+            wrote.add(name)
+
+        body(batch_df, bid, append)
+        # committed_round is monotone in the catalog; the high-water mark
+        # rides the same atomic manifest write as the delta publish
+        catalog.commit(bid, {mark: bid})
+        for name in catalog.long_chains(wrote):
+            catalog.compact(name, bid)
+
+    return sink
+
+
+def _start(stream: DataFrame, sink, checkpoint_dir: str):
+    """Run ``sink`` over every micro-batch available now; returns the
+    StreamingQuery."""
+    return (
+        stream.writeStream.outputMode("append")
+        .foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def _canon_udf():
@@ -54,18 +115,12 @@ def start_page_ingest(
     # engine's own workdir catalog: foreachBatch commits per micro-batch,
     # which would publish the engine's half-staged round deltas
     checkpoint_dir: str,
-    pages_schema: str = (
-        "url string, warc_ts timestamp, html binary, text string, lang string"
-    ),
+    pages_schema: str = PAGES_SCHEMA,
 ):
     """Tail pages_dir for new parquet files; per micro-batch, append
     canonicalized candidate rows to the catalog. Returns the
     StreamingQuery (caller: q.processAllAvailable() / q.stop())."""
-    stream = (
-        spark.readStream.schema(pages_schema)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(pages_dir)
-    )
+    stream = _tail(spark, pages_schema, pages_dir)
     return _start_candidate_ingest(spark, stream, catalog, checkpoint_dir)
 
 
@@ -80,7 +135,7 @@ def start_warc_ingest(
     and run the SAME idempotent candidate sink as the parquet ingest —
     one archive per binaryFile task, so a landing dir of 1 GB archives
     streams at file granularity."""
-    from crabspark.warc import PAGES_SCHEMA, _records_to_pages
+    from crabspark.warc import _records_to_pages
 
     stream = (
         spark.readStream.format("binaryFile")
@@ -115,24 +170,9 @@ def _start_candidate_ingest(
     ship_package(spark)
     canon = _canon_udf()
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # Abort-at-entry: if a previous invocation of ANY gate sharing this
-        # Catalog staged deltas and then failed before its commit, those
-        # deltas are still in Catalog._pending — without this, the retried
-        # batch would stage its own appends ON TOP and the next commit
-        # would publish both, duplicating rows. A foreachBatch sink owns
-        # the catalog for the duration of the call (gates on one catalog
-        # run sequentially), so dropping stale staged state here is safe.
-        catalog.abort()
-        # Idempotent replay guard: a crash between catalog.commit and
-        # Spark's checkpoint write replays the micro-batch with the same
-        # batch_id — skip ids at or below the high-water mark. (Batch ids
-        # are monotone within one checkpointLocation; a fresh checkpoint
-        # dir therefore requires a fresh candidates catalog.)
-        last = int(catalog.extra("ingest_last_batch", -1))
-        if int(batch_id) <= last:
-            return
-        out = (
+    def body(batch_df: DataFrame, bid: int, append) -> None:
+        append(
+            "candidates",
             batch_df.select("url")
             .withColumn("c", canon(F.col("url")))
             .select(
@@ -140,20 +180,14 @@ def _start_candidate_ingest(
                 F.col("c.canon").alias("canon"),
                 F.col("c.sha1").alias("sha1"),
                 F.col("c.domain").alias("host"),
-                F.lit(batch_id).alias("discovered_batch"),
+                F.lit(bid).alias("discovered_batch"),
             )
-            .filter(F.col("url").isNotNull())
+            .filter(F.col("url").isNotNull()),
         )
-        catalog.append("candidates", out, int(batch_id))
-        # committed_round is monotone in the catalog; the high-water mark
-        # rides the same atomic manifest write as the delta publish
-        catalog.commit(int(batch_id), {"ingest_last_batch": int(batch_id)})
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _start(
+        stream, _exactly_once(catalog, "ingest_last_batch", body),
+        checkpoint_dir,
     )
 
 
@@ -180,8 +214,9 @@ def start_neardup_gate(
 
     Scale: the store-side join is on band keys (near-linear candidates by
     LSH construction, never all-pairs); the verify stage ships fixed-width
-    int64 arrays. Exactly-once via the same batch high-water mark + atomic
-    commit as the other sinks."""
+    int64 arrays. Exactly-once via the shared sink (``_exactly_once``),
+    which also compacts the store's tables as their delta chains grow, so
+    the band join's scan cost stays O(corpus), not O(batches)."""
     ship_package(spark)
     from crabspark.queries import _SHINGLE_SPARK, _TOK_SPARK
 
@@ -225,17 +260,9 @@ def start_neardup_gate(
         )
         return sig.select("doc_id", "sh"), bands
 
-    stream = (
-        spark.readStream.schema(docs_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-    )
+    stream = _tail(spark, docs_schema, docs_dir, files=1)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        catalog.abort()  # drop stale staged deltas from a failed batch
-        last = int(catalog.extra("neardup_last_batch", -1))
-        if int(batch_id) <= last:
-            return
+    def body(batch_df: DataFrame, bid: int, append) -> None:
         sigs, bands = _sigs(batch_df)
         sigs = sigs.localCheckpoint()
         bands = bands.localCheckpoint()
@@ -278,32 +305,14 @@ def start_neardup_gate(
             )
             .localCheckpoint()
         )
-        clean = sigs.join(dups, "doc_id", "left_anti")
-        catalog.append("sig_shingles", clean, int(batch_id))
-        catalog.append(
-            "sig_bands",
-            bands.join(dups, "doc_id", "left_anti"),
-            int(batch_id),
-        )
+        append("sig_shingles", sigs.join(dups, "doc_id", "left_anti"))
+        append("sig_bands", bands.join(dups, "doc_id", "left_anti"))
         if not dups.isEmpty():
-            catalog.append(
-                "neardup_log",
-                dups.withColumn("batch", F.lit(int(batch_id))),
-                int(batch_id),
-            )
-        catalog.commit(int(batch_id), {"neardup_last_batch": int(batch_id)})
-        # the store gains one delta per micro-batch; without periodic
-        # folding the band-join's scan cost would grow O(batches), not
-        # O(corpus) — same amortized rewrite policy as the engine tables
-        for t in ("sig_bands", "sig_shingles"):
-            if catalog.delta_count(t) > 16:
-                catalog.compact(t, int(batch_id))
+            append("neardup_log", dups.withColumn("batch", F.lit(bid)))
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _start(
+        stream, _exactly_once(catalog, "neardup_last_batch", body),
+        checkpoint_dir,
     )
 
 
@@ -321,22 +330,14 @@ def start_quality_gate(
     ``quality_log(doc_id, verdict)`` so the drop reasons are auditable.
     Stateless (each doc judged on its own features), so the gate is pure
     map-side work — no store, no join, no shuffle — and composes in front
-    of the stateful near-dup gate. Exactly-once via the shared
-    high-water-mark + atomic-manifest-commit pattern."""
+    of the stateful near-dup gate. Exactly-once via the shared sink
+    (``_exactly_once``)."""
     ship_package(spark)
     from crabspark.queries import _TOK_SPARK, quality_verdict_expr
 
-    stream = (
-        spark.readStream.schema(docs_schema)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(docs_dir)
-    )
+    stream = _tail(spark, docs_schema, docs_dir)
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        catalog.abort()  # drop stale staged deltas from a failed batch
-        last = int(catalog.extra("quality_last_batch", -1))
-        if int(batch_id) <= last:
-            return
+    def body(batch_df: DataFrame, bid: int, append) -> None:
         judged = (
             batch_df.withColumn("toks", F.expr(_TOK_SPARK))
             .withColumn("verdict", quality_verdict_expr())
@@ -345,18 +346,15 @@ def start_quality_gate(
         )
         keep = judged.filter(F.col("verdict") == "keep").drop("verdict")
         rejects = judged.filter(F.col("verdict") != "keep").select(
-            "doc_id", "verdict", F.lit(int(batch_id)).alias("batch")
+            "doc_id", "verdict", F.lit(bid).alias("batch")
         )
-        catalog.append("clean_docs", keep, int(batch_id))
+        append("clean_docs", keep)
         if not rejects.isEmpty():
-            catalog.append("quality_log", rejects, int(batch_id))
-        catalog.commit(int(batch_id), {"quality_last_batch": int(batch_id)})
+            append("quality_log", rejects)
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _start(
+        stream, _exactly_once(catalog, "quality_last_batch", body),
+        checkpoint_dir,
     )
 
 
@@ -366,9 +364,7 @@ def start_polite_gate(
     catalog: Catalog,
     checkpoint_dir: str,
     delay_ms: int = 1000,
-    pages_schema: str = (
-        "url string, warc_ts timestamp, html binary, text string, lang string"
-    ),
+    pages_schema: str = PAGES_SCHEMA,
 ):
     """CUSTOM STATEFUL streaming operator (``applyInPandasWithState``):
     the reference's per-request politeness delay (crawler_request_delay_ms,
@@ -389,17 +385,10 @@ def start_polite_gate(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     host = F.regexp_extract("url", r"^https?://([^/?#]+)", 1)
-    src = (
-        spark.readStream.schema(pages_schema)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(pages_dir)
-        .select(
-            "url",
-            host.alias("host"),
-            (F.col("warc_ts").cast("double") * 1000).cast("long").alias(
-                "ts_ms"
-            ),
-        )
+    src = _tail(spark, pages_schema, pages_dir).select(
+        "url",
+        host.alias("host"),
+        (F.col("warc_ts").cast("double") * 1000).cast("long").alias("ts_ms"),
     )
 
     out_schema = "url string, host string, ts_ms long, allowed boolean, wait_ms long"
@@ -435,20 +424,12 @@ def start_polite_gate(
         GroupStateTimeout.NoTimeout,
     )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        catalog.abort()  # drop stale staged deltas from a failed batch
-        last = int(catalog.extra("polite_last_batch", -1))
-        if int(batch_id) <= last:
-            return
-        catalog.append("polite_log", batch_df, int(batch_id))
-        catalog.commit(int(batch_id), {"polite_last_batch": int(batch_id)})
+    def body(batch_df: DataFrame, bid: int, append) -> None:
+        append("polite_log", batch_df)
 
-    return (
-        gated.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _start(
+        gated, _exactly_once(catalog, "polite_last_batch", body),
+        checkpoint_dir,
     )
 
 
@@ -459,9 +440,7 @@ def start_host_rate(
     checkpoint_dir: str,
     window: str = "10 minutes",
     watermark: str = "30 minutes",
-    pages_schema: str = (
-        "url string, warc_ts timestamp, html binary, text string, lang string"
-    ),
+    pages_schema: str = PAGES_SCHEMA,
 ):
     """Watermarked windowed aggregation over the capture stream: pages per
     (host, event-time window). Append output mode, so a window row is
@@ -470,13 +449,11 @@ def start_host_rate(
     double-counted (the late-data contract a downstream scheduler relies
     on). Watermark state lives in the checkpoint: restarts with the same
     checkpoint keep finalized windows closed. The sink appends finalized
-    rows to the catalog with the same replayed-batch guard as the ingest
-    sink."""
+    rows to the catalog through the shared exactly-once sink
+    (``_exactly_once``)."""
     host = F.regexp_extract("url", r"^https?://([^/?#]+)", 1)
     agg = (
-        spark.readStream.schema(pages_schema)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(pages_dir)
+        _tail(spark, pages_schema, pages_dir)
         .withWatermark("warc_ts", watermark)
         .groupBy(F.window("warc_ts", window).alias("win"), host.alias("host"))
         .agg(F.count("*").alias("n_pages"))
@@ -487,20 +464,12 @@ def start_host_rate(
         )
     )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        catalog.abort()  # drop stale staged deltas from a failed batch
-        last = int(catalog.extra("hostrate_last_batch", -1))
-        if int(batch_id) <= last:
-            return
-        catalog.append("host_rate", batch_df, int(batch_id))
-        catalog.commit(int(batch_id), {"hostrate_last_batch": int(batch_id)})
+    def body(batch_df: DataFrame, bid: int, append) -> None:
+        append("host_rate", batch_df)
 
-    return (
-        agg.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _start(
+        agg, _exactly_once(catalog, "hostrate_last_batch", body),
+        checkpoint_dir,
     )
 
 
@@ -510,9 +479,7 @@ def start_warc_export(
     outdir: str,
     checkpoint_dir: str,
     wet: bool = False,
-    pages_schema: str = (
-        "url string, warc_ts timestamp, html binary, text string, lang string"
-    ),
+    pages_schema: str = PAGES_SCHEMA,
 ):
     """Streaming archival sink — the write-side twin of start_warc_ingest:
     tail pages_dir for new parquet and roll each micro-batch into its own
@@ -536,11 +503,7 @@ def start_warc_export(
 
     ship_package(spark)
     os.makedirs(outdir, exist_ok=True)
-    stream = (
-        spark.readStream.schema(pages_schema)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(pages_dir)
-    )
+    stream = _tail(spark, pages_schema, pages_dir)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         tag = f"b{int(batch_id):06d}"
@@ -554,9 +517,4 @@ def start_warc_export(
         with open(marker, "w") as f:
             f.write(str(n))
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, sink, checkpoint_dir)

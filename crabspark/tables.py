@@ -12,8 +12,10 @@ Scale notes (10^10-URL design):
   not O(history);
 - reconstruction ("merge-on-read") happens lazily in Spark as a union of
   delta scans; key-latest semantics are one window per read, which Iceberg
-  would replace with positional deletes — the engine compacts when the
-  delta count grows (``compact()``);
+  would replace with positional deletes;
+- ``commit()`` is the one way a delta is published and ``compact()`` the
+  one way a chain is rewritten: past ``COMPACT_DELTAS`` deltas, a chain
+  becomes one overwrite delta and the superseded files are removed;
 - the manifest is a single tiny JSON (table -> committed delta list),
   written tmp+rename: a killed job resumes from the last fully-committed
   round with no partial state visible (Q5 / north-rule checkpoint story).
@@ -28,6 +30,10 @@ import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+# A table whose delta chain holds more than this many deltas is due a
+# compact(): merge-on-read cost then stays flat as rounds accumulate.
+COMPACT_DELTAS = 16
 
 
 class Catalog:
@@ -48,7 +54,8 @@ class Catalog:
         # pipeline). Safe for CATALOG writes because atomicity lives in
         # the manifest, not the directory: a failed job leaves partial
         # files in a delta dir no committed manifest ever references
-        # (abort() drops the staged entry, GC removes the files).
+        # (abort() drops the staged entry; the table's next compact
+        # removes the files).
         #
         # SESSION-WIDE SIDE EFFECT (documented contract): the committer
         # version is a Hadoop conf, so it applies to every parquet write
@@ -104,26 +111,38 @@ class Catalog:
         os.replace(tmp, self._manifest_path)  # atomic on POSIX
 
     # --- writes (staged until commit) ---
-    def _write_delta(self, name: str, df: DataFrame, mode: str, rnd: int) -> None:
+    def _stage(self, name: str, mode: str, rnd: int, data) -> None:
+        """Reserve the table's next delta slot under the lock, then write
+        ``data`` there (a DataFrame as a directory, a pyarrow Table as one
+        file): concurrent writers never collide on a path, nor reuse one
+        the committed chain names."""
+        local = not isinstance(data, DataFrame)
+        kind, ext = ("local", ".parquet") if local else ("delta", "")
         with self._lock:
             tbl = self.state["tables"].setdefault(name, {"deltas": []})
-            seq = len(tbl["deltas"]) + sum(
-                1 for n, _ in self._pending if n == name
-            )
-            rel = f"{name}/delta-{rnd:06d}-{seq:06d}"
-            # reserve the slot before the (slow) write so concurrent writers
-            # to the same table never collide on a path
+            taken = {d["path"] for d in tbl["deltas"]}
+            taken |= {d["path"] for n, d in self._pending if n == name}
+            seq = len(taken)
+            while (rel := f"{name}/{kind}-{rnd:06d}-{seq:06d}{ext}") in taken:
+                seq += 1
             entry = (name, {"path": rel, "mode": mode, "round": rnd})
             self._pending.append(entry)
+        path = os.path.join(self.root, rel)
         try:
-            df.write.mode("overwrite").parquet(os.path.join(self.root, rel))
+            if local:
+                import pyarrow.parquet as pq
+
+                os.makedirs(os.path.dirname(path), exist_ok=True)
+                pq.write_table(data, path)
+            else:
+                data.write.mode("overwrite").parquet(path)
         except Exception:
             with self._lock:
                 self._pending.remove(entry)
             raise
 
     def append(self, name: str, df: DataFrame, rnd: int) -> None:
-        self._write_delta(name, df, "append", rnd)
+        self._stage(name, "append", rnd, df)
 
     def append_local(self, name: str, table, rnd: int) -> None:
         """Stage a driver-local pyarrow Table as a delta WITHOUT a Spark
@@ -131,28 +150,11 @@ class Catalog:
         full Spark write job for them is pure fixed floor (each job costs
         scheduling + task launch regardless of size). Spark reads the
         resulting file alongside directory deltas transparently."""
-        import pyarrow.parquet as pq
-
-        with self._lock:
-            tbl = self.state["tables"].setdefault(name, {"deltas": []})
-            seq = len(tbl["deltas"]) + sum(
-                1 for n, _ in self._pending if n == name
-            )
-            rel = f"{name}/local-{rnd:06d}-{seq:06d}.parquet"
-            entry = (name, {"path": rel, "mode": "append", "round": rnd})
-            self._pending.append(entry)
-        try:
-            path = os.path.join(self.root, rel)
-            os.makedirs(os.path.dirname(path), exist_ok=True)
-            pq.write_table(table, path)
-        except Exception:
-            with self._lock:
-                self._pending.remove(entry)
-            raise
+        self._stage(name, "append", rnd, table)
 
     def overwrite(self, name: str, df: DataFrame, rnd: int) -> None:
         """Logical overwrite: later reads see only deltas from this one on."""
-        self._write_delta(name, df, "overwrite", rnd)
+        self._stage(name, "overwrite", rnd, df)
 
     def commit(self, rnd: int, extras: dict | None = None) -> None:
         """Atomically publish every delta staged since the last commit.
@@ -194,56 +196,86 @@ class Catalog:
                 self.state["extras"].update(extras)
             self._persist()
 
-    def gc_superseded(self, name: str) -> None:
-        """Physically drop deltas made unreachable by a later overwrite
-        (the frontier writes one per round; without this, disk grows
-        O(rounds x frontier))."""
+    def compact(
+        self, name: str, rnd: int, df: DataFrame | None = None,
+        extras: dict | None = None,
+    ) -> None:
+        """Rewrite a table's delta chain as one overwrite delta at round
+        ``rnd`` (Iceberg rewrite_data_files + expire_snapshots): ``df``
+        (default: the table as read now) is published with ``extras`` by
+        ``commit()``; the manifest then drops the superseded deltas, and
+        only then are their files removed. A kill at any point reads the
+        old chain or the compacted one; files it leaves behind go at the
+        table's next compact."""
+        if any(n == name for n, _ in self._pending):
+            raise RuntimeError(f"compact({name!r}) would drop its staged deltas")
+        if df is None:
+            df = self.read(name)
+            if df is None:
+                return
+        try:
+            self.overwrite(name, df, rnd)
+            self.commit(rnd, extras)
+        except BaseException:
+            self.abort()
+            raise
         with self._lock:
-            tbl = self.state["tables"].get(name)
-            if not tbl:
-                return
-            deltas = tbl["deltas"]
-            last_ow = 0
-            for i, d in enumerate(deltas):
-                if d["mode"] == "overwrite":
-                    last_ow = i
-            dead, live = deltas[:last_ow], deltas[last_ow:]
-            if not dead:
-                return
-            tbl["deltas"] = live
+            tbl = self.state["tables"][name]
+            tbl["deltas"] = self._chain(name)
             self._persist()
-        for d in dead:
-            p = os.path.join(self.root, d["path"])
-            shutil.rmtree(p, ignore_errors=True)
+            # under the lock, so no writer starts a file here meanwhile
+            keep = {d["path"] for d in tbl["deltas"]}
+            keep |= {d["path"] for n, d in self._pending if n == name}
+            self._remove_unnamed(name, keep)
+
+    def _remove_unnamed(self, name: str, keep: set[str]) -> None:
+        """Remove every delta directory or file of the table that ``keep``
+        does not name, aborted writes' orphans included."""
+        table_dir = os.path.join(self.root, name)
+        for entry in sorted(os.listdir(table_dir)):
+            if f"{name}/{entry}" in keep:
+                continue
+            path = os.path.join(table_dir, entry)
+            if os.path.isdir(path):
+                shutil.rmtree(path)
+            else:
+                os.remove(path)
 
     def abort(self) -> None:
         """Drop staged deltas (their files become unreferenced garbage,
-        exactly like Iceberg orphan files). Lock-guarded: concurrent
-        writers may still be staging when a failing round aborts."""
+        exactly like Iceberg orphan files, until the table's next
+        compact). Lock-guarded: concurrent writers may still be staging
+        when a failing round aborts."""
         with self._lock:
             self._pending.clear()
 
     # --- reads (committed state only) ---
-    def _delta_paths(self, name: str) -> list[str]:
-        tbl = self.state["tables"].get(name)
-        if not tbl or not tbl["deltas"]:
-            return []
-        deltas = tbl["deltas"]
-        start = 0
-        for i, d in enumerate(deltas):
-            if d["mode"] == "overwrite":
-                start = i
-        return [os.path.join(self.root, d["path"]) for d in deltas[start:]]
+    def _chain(self, name: str, rnd: int | None = None) -> list[dict]:
+        """The committed deltas a read sees: those written at rounds <=
+        ``rnd`` (default: all), from the last overwrite among them on."""
+        deltas = [
+            d for d in self.state["tables"].get(name, {}).get("deltas", [])
+            if rnd is None or d["round"] <= rnd
+        ]
+        start = max(
+            (i for i, d in enumerate(deltas) if d["mode"] == "overwrite"),
+            default=0,
+        )
+        return deltas[start:]
+
+    def _scan(self, chain: list[dict]) -> DataFrame | None:
+        if not chain:
+            return None
+        return self.spark.read.parquet(
+            *[os.path.join(self.root, d["path"]) for d in chain]
+        )
 
     def exists(self, name: str) -> bool:
-        return bool(self._delta_paths(name))
+        return bool(self._chain(name))
 
     def read(self, name: str) -> DataFrame | None:
         """Union of committed deltas (one multi-path parquet scan)."""
-        paths = self._delta_paths(name)
-        if not paths:
-            return None
-        return self.spark.read.parquet(*paths)
+        return self._scan(self._chain(name))
 
     def read_at(self, name: str, rnd: int) -> DataFrame | None:
         """Time travel (Iceberg `VERSION AS OF` analogue): the table as of
@@ -252,58 +284,28 @@ class Catalog:
         horizon. Because every round commits atomically, this is exactly
         the state a reader at the end of round ``rnd`` saw.
 
-        History retention matches the physical layout: ``compact()`` and
-        the frontier fold rewrite the chain stamped at the rewrite round
-        (expire_snapshots + rewrite_data_files in one step), so rounds
-        older than the last rewrite are no longer reachable — ``None`` is
-        returned, never a partial reconstruction."""
-        tbl = self.state["tables"].get(name)
-        if not tbl:
-            return None
-        deltas = [d for d in tbl["deltas"] if d["round"] <= rnd]
-        if not deltas:
-            return None
-        start = 0
-        for i, d in enumerate(deltas):
-            if d["mode"] == "overwrite":
-                start = i
-        paths = [os.path.join(self.root, d["path"]) for d in deltas[start:]]
-        return self.spark.read.parquet(*paths)
-
-    def compact(self, name: str, rnd: int) -> None:
-        """Rewrite a table's delta chain as one delta (Iceberg rewrite_data_files
-        analogue). Call when delta count is large; read-optimized afterwards."""
-        df = self.read(name)
-        if df is None:
-            return
-        tbl = self.state["tables"][name]
-        old = list(tbl["deltas"])
-        rel = f"{name}/compact-{rnd:06d}-{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").parquet(os.path.join(self.root, rel))
-        tbl["deltas"] = [{"path": rel, "mode": "overwrite", "round": rnd}]
-        self._persist()
-        for d in old:
-            p = os.path.join(self.root, d["path"])
-            if os.path.exists(p):
-                shutil.rmtree(p, ignore_errors=True)
+        History retention matches the physical layout: ``compact()`` (the
+        frontier fold included) rewrites the chain as one delta stamped at
+        its own round and removes the rest, so rounds older than the last
+        compaction are no longer reachable — ``None`` is returned, never a
+        partial reconstruction."""
+        return self._scan(self._chain(name, rnd))
 
     def delta_count(self, name: str) -> int:
         return len(self.state["tables"].get(name, {}).get("deltas", []))
+
+    def long_chains(self, names=None) -> list[str]:
+        """The tables (of ``names``, default all) due a ``compact()``."""
+        if names is None:
+            names = self.state["tables"]
+        return [n for n in sorted(names) if self.delta_count(n) > COMPACT_DELTAS]
 
     def snapshots(self, name: str) -> list[int]:
         """Committed rounds reachable by ``read_at`` for this table (the
         Iceberg snapshot-log analogue): distinct delta rounds at or after
         the chain's last overwrite, ascending. Empty when the table does
         not exist."""
-        tbl = self.state["tables"].get(name)
-        if not tbl or not tbl["deltas"]:
-            return []
-        deltas = tbl["deltas"]
-        start = 0
-        for i, d in enumerate(deltas):
-            if d["mode"] == "overwrite":
-                start = i
-        return sorted({d["round"] for d in deltas[start:]})
+        return sorted({d["round"] for d in self._chain(name)})
 
     @property
     def committed_round(self) -> int:
@@ -311,4 +313,3 @@ class Catalog:
 
     def extra(self, key: str, default=None):
         return self.state["extras"].get(key, default)
-

@@ -1,22 +1,26 @@
 """Frontier crash consistency and fold mechanics (the adds-only delta chain).
 
 The frontier is one catalog table: seeds are an overwrite delta, every
-round appends its children as one delta, and the periodic fold
-(``Engine._fold_frontier``) rewrites the live rows as a single overwrite
-delta and garbage-collects the superseded ones. Atomicity lives in the
+round appends its children as one delta, and the fold
+(``Engine._fold_frontier``) is the frontier's ``Catalog.compact``: it
+publishes the live rows as a single overwrite delta, then removes the
+superseded ones from the manifest and from disk. Atomicity lives in the
 catalog manifest, so a kill at any point leaves either the last committed
 rows or the folded rows, never a mix. Checked here:
 
 - a failed round and an uncommitted (staged) delta leave the committed
   frontier unchanged;
 - the fold keeps the live rows, leaves one overwrite delta, removes the
-  superseded directories, and a kill after its commit reads the folded set;
+  superseded directories, and a kill at its removal step reads the folded
+  set, with the leftover directories removed by the next fold;
 - a kill inside ``ingest_candidates`` or between the seed write and the
   init commit rolls back cleanly, and the retry queues each row once;
 - an ingest right after the seed init (or a ``fresh_seen`` re-seed),
   before any round, commits;
-- the crash matrix: a kill at every write, commit and GC step of a
+- the crash matrix: a kill at every write, commit and removal step of a
   frontier append and a fold;
+- the in-process round pointer after ``run()`` is the one a reopened
+  Engine starts at;
 - a store written with the removed host-bucketed layout is refused.
 
 Kills are simulated by monkeypatching ``Catalog``, the parquet writer,
@@ -195,17 +199,17 @@ def test_replace_folds_and_preserves_mask(spark, data, tmp_path):
 
 
 def test_fold_crash_rolls_forward(spark, data, tmp_path, monkeypatch):
-    """A kill after the fold's commit, before gc_superseded, reads the
-    folded set; the superseded directories are garbage the next GC
-    removes."""
+    """A kill at the fold's first removal step, after its commit, reads
+    the folded set; the superseded directories are left on disk and the
+    next fold removes them."""
     _store(spark, tmp_path / "wd")
     eng = _engine(spark, data, tmp_path / "wd")
     old_dirs = _frontier_dirs(tmp_path / "wd")
 
-    def killed(self, name):
+    def killed(*_a, **_k):
         raise RuntimeError("simulated crash")
 
-    monkeypatch.setattr(Catalog, "gc_superseded", killed)
+    monkeypatch.setattr(tables.shutil, "rmtree", killed)
     with pytest.raises(RuntimeError, match="simulated crash"):
         eng._fold_frontier(2)
     monkeypatch.undo()
@@ -213,7 +217,11 @@ def test_fold_crash_rolls_forward(spark, data, tmp_path, monkeypatch):
     eng2 = _engine(spark, data, tmp_path / "wd")
     assert _live(eng2) == LIVE
     assert set(old_dirs) <= set(_frontier_dirs(tmp_path / "wd"))
-    eng2.catalog.gc_superseded("frontier")
+    eng2._fold_frontier(3)
+    deltas = eng2.catalog.state["tables"]["frontier"]["deltas"]
+    assert _frontier_dirs(tmp_path / "wd") == [
+        os.path.basename(d["path"]) for d in deltas
+    ]
     assert not set(old_dirs) & set(_frontier_dirs(tmp_path / "wd"))
     assert _committed(spark, tmp_path / "wd") == LIVE
 
@@ -363,10 +371,10 @@ KILL_MATRIX = [
     ("insert-intent", "insert", "baseline"),   # parquet write never runs
     ("insert-done", "insert", "baseline"),     # delta staged, no commit
     ("fold-staged", "fold", "baseline"),       # overwrite staged, no commit
-    ("fold-intent", "fold", "folded"),         # manifest committed
-    ("fold-old-deleted", "fold", "folded"),    # GC manifest persisted
+    ("fold-intent", "fold", "folded"),         # chain shortened, none removed
+    ("fold-old-deleted", "fold", "folded"),    # first removal raises
     ("fold-one-moved", "fold", "folded"),      # first superseded dir removed
-    ("fold-moved", "fold", "folded"),          # GC returned
+    ("fold-moved", "fold", "folded"),          # compact returned
     ("persist-tmp", "insert", "baseline"),     # manifest tmp not yet renamed
 ]
 
@@ -382,7 +390,7 @@ def _kill(monkeypatch, step):
     elif step in ("insert-done", "fold-staged"):
         monkeypatch.setattr(Catalog, "commit", crash)
     elif step == "fold-intent":
-        monkeypatch.setattr(Catalog, "gc_superseded", crash)
+        monkeypatch.setattr(Catalog, "_remove_unnamed", crash)
     elif step in ("fold-old-deleted", "fold-one-moved"):
         real_rmtree = shutil.rmtree
         removed = []
@@ -396,13 +404,13 @@ def _kill(monkeypatch, step):
 
         monkeypatch.setattr(tables.shutil, "rmtree", rmtree)
     elif step == "fold-moved":
-        real_gc = Catalog.gc_superseded
+        real_compact = Catalog.compact
 
-        def gc_then_crash(self, name):
-            real_gc(self, name)
+        def compact_then_crash(self, *a, **k):
+            real_compact(self, *a, **k)
             crash()
 
-        monkeypatch.setattr(Catalog, "gc_superseded", gc_then_crash)
+        monkeypatch.setattr(Catalog, "compact", compact_then_crash)
     elif step == "persist-tmp":
         monkeypatch.setattr(tables.os, "replace", crash)
 
@@ -411,10 +419,11 @@ def _kill(monkeypatch, step):
 def test_crash_matrix_kill_points(
     spark, data, tmp_path, monkeypatch, step, op, expected
 ):
-    """Kill the process at every write, commit and GC step of a frontier
-    append and a fold: a fresh catalog reads exactly the last committed
-    rows (kill before the manifest commit) or exactly the folded rows
-    (kill after it), and the live view is the same either way."""
+    """Kill the process at every write, commit and removal step of a
+    frontier append and a fold: a fresh catalog reads exactly the last
+    committed rows (kill before the manifest commit) or exactly the
+    folded rows (kill after it), and the live view is the same either
+    way."""
     cat = _store(spark, tmp_path / "wd")
     eng = _engine(spark, data, tmp_path / "wd") if op == "fold" else None
     child = spark.createDataFrame(_rows(8, 9, 2), FRONTIER_SCHEMA)
@@ -431,6 +440,15 @@ def test_crash_matrix_kill_points(
     else:
         assert _committed(spark, tmp_path / "wd") == LIVE
     assert _live(_engine(spark, data, tmp_path / "wd")) == LIVE
+
+
+def test_round_pointer_matches_reopened_store(spark, data, tmp_path):
+    """After ``run()``, whose finalize commits the completion marks one
+    round past the last crawled round, the in-process Engine continues
+    from the same round a freshly opened Engine starts at."""
+    eng = _engine(spark, data, tmp_path / "wd")
+    eng.run(max_rounds=1)
+    assert eng.round == _engine(spark, data, tmp_path / "wd").round
 
 
 def test_bucketed_store_is_refused(spark, data, tmp_path):

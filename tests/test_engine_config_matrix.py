@@ -5,6 +5,7 @@ import os
 
 import pytest
 
+from crabspark import tables
 from crabspark.config import Config
 from crabspark.engine import Engine
 from fixtures import gen_pages
@@ -89,11 +90,14 @@ def test_shuffle_fetch_join(spark, fixture_paths, tmp_path):
     compare(spark, fixture_paths, tmp_path, cfg, "shufflejoin")
 
 
-def test_frontier_fold_every_round(spark, fixture_paths, tmp_path):
-    """frontier_fold_deltas=0: the adds-only frontier folds (physically
-    drops visited rows) after every round — parity must be unaffected and
-    the frontier table must stay a single folded delta."""
-    cfg = cfg_with(free_crawl=True, frontier_fold_deltas=0)
+def test_frontier_fold_every_round(spark, fixture_paths, tmp_path, monkeypatch):
+    """Compaction threshold 0: every table is compacted after every round,
+    and the adds-only frontier folds (physically drops visited rows) —
+    parity must be unaffected, the frontier and metrics_partitions tables
+    must each end as a single delta, and every table directory must hold
+    exactly the deltas its manifest names."""
+    monkeypatch.setattr(tables, "COMPACT_DELTAS", 0)
+    cfg = cfg_with(free_crawl=True)
     data = gen_pages.generate(n_pages=N_PAGES, seed=42)
     golden = run_oracle(data["pages"], data["robots"], cfg)
     eng = Engine(
@@ -108,11 +112,18 @@ def test_frontier_fold_every_round(spark, fixture_paths, tmp_path):
         assert vis[url]["is_blocked"] == row["is_blocked"], url
         assert vis[url]["is_complete"] == row["is_complete"], url
     assert eng.catalog.delta_count("frontier") == 1
+    assert eng.catalog.delta_count("metrics_partitions") == 1
     # folded frontier holds no visited canon
     frontier = eng.catalog.read("frontier")
     if frontier is not None:
         live = {r["canon"] for r in frontier.collect()}
         assert not (live & set(golden.visited))
+    # disk census: no superseded or orphaned delta is left behind
+    for name, tbl in eng.catalog.state["tables"].items():
+        on_disk = sorted(os.listdir(os.path.join(eng.catalog.root, name)))
+        assert on_disk == sorted(
+            os.path.basename(d["path"]) for d in tbl["deltas"]
+        ), name
 
 
 def test_ua_not_rotating(spark, fixture_paths, tmp_path):

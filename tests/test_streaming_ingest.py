@@ -437,6 +437,47 @@ def test_quality_gate_filters_at_ingest(spark, tmp_path):
     ) == [1, 4]
 
 
+def test_sink_aborts_stale_deltas_at_entry(spark, tmp_path, monkeypatch):
+    """A batch whose commit fails after the sink staged its deltas leaves
+    them staged in the Catalog; the restarted query replays the batch on
+    the same checkpoint, and the shared sink drops the stale deltas at
+    entry, so every doc lands exactly once in clean_docs or quality_log."""
+    import pandas as pd
+
+    from crabspark.streaming import start_quality_gate
+
+    long_ok = ("the quick planner folds constants and the executor streams "
+               "rows to a hash table while the sink commits atomically")
+    docs_dir = str(tmp_path / "docs")
+    os.makedirs(docs_dir)
+    pd.DataFrame(
+        [{"doc_id": i, "text": long_ok if i % 2 else "tiny doc here",
+          "lang": "en", "source": "s"} for i in range(1, 7)]
+    ).to_parquet(f"{docs_dir}/f1.parquet", index=False)
+    cat = Catalog(str(tmp_path / "cat"), spark)
+    real_commit = Catalog.commit
+    failed = []
+
+    def commit_fails_once(self, rnd, extras=None):
+        if not failed:
+            failed.append(rnd)
+            raise RuntimeError("simulated commit failure")
+        return real_commit(self, rnd, extras)
+
+    monkeypatch.setattr(Catalog, "commit", commit_fails_once)
+    q = start_quality_gate(spark, docs_dir, cat, str(tmp_path / "ck"))
+    with pytest.raises(Exception, match="simulated commit failure"):
+        q.awaitTermination(120)
+    assert failed and cat._pending  # the failed batch's deltas stay staged
+    monkeypatch.undo()
+    q2 = start_quality_gate(spark, docs_dir, cat, str(tmp_path / "ck"))
+    q2.awaitTermination(120)
+    kept = [r["doc_id"] for r in cat.read("clean_docs").collect()]
+    dropped = [r["doc_id"] for r in cat.read("quality_log").collect()]
+    assert sorted(kept + dropped) == list(range(1, 7))
+    assert sorted(kept) == [1, 3, 5]
+
+
 def test_warc_streaming_ingest_matches_parquet_ingest(spark, tmp_path):
     """Archives landing in a dir stream through the SAME idempotent
     candidate sink as parquet pages: identical canon/sha1 rows out."""

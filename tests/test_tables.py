@@ -1,5 +1,8 @@
 """Catalog (snapshot table layer) semantics: atomic commits, uncommitted
-deltas invisible after crash, overwrite/append reconstruction, compaction."""
+deltas invisible after crash, overwrite/append reconstruction, compaction
+(content, history and the files left on disk)."""
+
+import os
 
 import pytest
 
@@ -58,6 +61,26 @@ def test_compaction_preserves_content(spark, tmp_path):
     assert cat.delta_count("t") == 1
     assert {row["k"] for row in cat.read("t").collect()} == {
         "k0", "k1", "k2", "k3", "k4"
+    }
+
+
+def test_compact_leaves_only_named_files(spark, tmp_path):
+    """Disk census: after compacting a chain of 17 driver-local deltas,
+    the table directory holds exactly the paths the manifest names — the
+    superseded local-*.parquet files are removed, not just unreferenced."""
+    import pyarrow as pa
+
+    cat = Catalog(str(tmp_path / "census"), spark)
+    for r in range(17):
+        cat.append_local("t", pa.table({"k": [f"k{r}"], "v": [r]}), r)
+        cat.commit(r)
+    cat.compact("t", 17)
+    on_disk = sorted(os.listdir(os.path.join(cat.root, "t")))
+    deltas = cat.state["tables"]["t"]["deltas"]
+    named = [os.path.basename(d["path"]) for d in deltas]
+    assert on_disk == named and len(named) == 1
+    assert {r["k"] for r in cat.read("t").collect()} == {
+        f"k{r}" for r in range(17)
     }
 
 
