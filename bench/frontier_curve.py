@@ -64,7 +64,6 @@ def main() -> None:
     cfg.seeds = [gen_pages.SEED_URL]
     cfg.scheduling = "throughput"
     cfg.per_host_quota = args.quota          # bounded batch per round
-    cfg.salt_buckets = 8
     cfg.max_urls_to_visit = args.pages * 2   # cap never binds
     cfg.respect_robots = True
     cfg.collect_images = False

@@ -9,13 +9,12 @@ defaults entirely).
 Rebuild-only fields extend the reference for the distributed engine:
 ``scheduling`` ('dfs-parity' reproduces the sequential reference order,
 'throughput' is the benchmarked BSP mode), ``max_depth``, ``per_host_quota``,
-``salt_buckets``, ``seeds`` (the reference has a single starting_url), the
-bloom sizing, the fetch-join broadcast limit and the Arrow batch size.
-The frontier has one layout (the adds-only delta chain), the fetch join
-one rule, and every table one compaction threshold
-(``tables.COMPACT_DELTAS``), so no field picks any of them; a config file
-that still sets a removed key (a frontier layout, ``fetch_join``, a
-frontier fold threshold) loads with it ignored, like any unknown key.
+``seeds`` (the reference has a single starting_url) and the bloom sizing.
+Every other engine choice has one value, kept as a module constant, not a
+field: the frontier layout, the fetch join rule and its broadcast limit,
+the compaction threshold, the salt fan-out and the Arrow batch size. A
+config file that still sets a removed key loads with it ignored, like any
+unknown key.
 """
 
 from __future__ import annotations
@@ -108,20 +107,8 @@ class Config:
     max_depth: int | None = None  # None = unbounded (cap is the stop condition)
     scheduling: str = "dfs-parity"  # 'dfs-parity' | 'throughput'
     per_host_quota: int | None = 1  # URLs/host/round politeness; None/0 = off
-    salt_buckets: int = 8  # salt fan-out for host-skew mitigation
-    bloom_capacity: int = 1_000_000  # expected seen-set size per bloom epoch
+    bloom_capacity: int = 1_000_000  # seen-set size the fpp holds up to
     bloom_fpp: float = 0.01
-    # the fetch join broadcasts the round batch into the pages scan only
-    # while it fits (<= fetch_broadcast_limit rows), else falls back to a
-    # shuffle-hash join (batch side builds) — a 10^8-row batch must never
-    # be broadcast
-    fetch_broadcast_limit: int = 1_000_000
-    # Arrow batch rows for the pandas-UDF stages. html blobs are multi-KB,
-    # so Spark's default 10k-row batches balloon to 100+ MB of Python-side
-    # objects per concurrent worker; with 32 workers the extract stage
-    # ANTI-scales on memory thrash (measured: 17s@8 cores -> 59s@32 at
-    # 10k rows vs 9.5s@32 at 512 rows on the 400k-page fixture).
-    arrow_max_records_per_batch: int = 512
 
     def __post_init__(self) -> None:
         if not self.seeds:

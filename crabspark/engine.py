@@ -6,7 +6,7 @@ Each round is the distributed form of one reference recursion layer
   frontier --select_batch--> visit batch (politeness rank + cap trim, F6)
     -> visited_ops 'visit' rows (MERGE-equivalent upsert log, S6)
     -> fetch-simulation join against the pages table (J1), one plain scan:
-       a batch of at most cfg.fetch_broadcast_limit rows is broadcast INTO
+       a batch of at most FETCH_BROADCAST_LIMIT rows is broadcast INTO
        the pages scan (the 100-TB side streams, never shuffles), a larger
        one is the build side of a shuffle-hash join (the no-assets image
        join follows the same rule); misses are fetch failures (Q4)
@@ -19,11 +19,12 @@ Each round is the distributed form of one reference recursion layer
     -> survivors: imgs join the assets table (Content-Type predicate F5,
        BLOB stored, S2/S8), links become next-frontier ADD rows with
        DFS-prefix priorities (§7.4) and edge rows for the completion agg
-    -> seen deltas + bloom update, metrics, atomic round commit.
+    -> seen deltas + in-memory bloom update, metrics, atomic round commit.
 
 Scale design notes (10^10 frontier):
 - nothing driver-resident scales with frontier size: the bloom is fixed-size
-  bits, counters are scalars, the queued-seed set is <= |seeds|;
+  bits (a cache of ``seen``, rebuilt from it at open), counters are scalars,
+  the queued-seed set is <= |seeds|;
 - per-round WRITES are O(batch + children): the frontier is adds-only;
   visited rows are masked at read time (visit-round vs added-round join
   over only the rounds since the last fold) and physically dropped by the
@@ -52,8 +53,9 @@ Scale design notes (10^10 frontier):
 - every count the loop needs is computed in one aggregate job per round.
 
 Resume: the catalog manifest names the last committed round; an interrupted
-round leaves only unreferenced files. ``Engine.open`` reloads the bloom and
-counters from the manifest and continues (Q5 / north-rule checkpoint story).
+round leaves only unreferenced files. An Engine opened over the store reads
+its counters from the manifest, rebuilds the bloom from the committed ``seen``
+table and continues (Q5 / north-rule checkpoint story).
 A *fresh run over an existing store* (reference process restart: in-memory
 seen set lost, SQLite kept) is ``fresh_seen=True``: the completed filter
 then becomes the observable resume gate, exactly like the reference.
@@ -82,6 +84,17 @@ FRONTIER_SCHEMA = (
 )
 OPS_SCHEMA = "url string, referrer string, round int, priority string, op string"
 EDGES_SCHEMA = "parent string, parent_round int, child string"
+
+# Arrow batch rows for the pandas-UDF stages. html blobs are multi-KB, so
+# Spark's default 10k-row batches balloon to 100+ MB of Python-side objects
+# per concurrent worker; with 32 workers the extract stage ANTI-scales on
+# memory thrash (measured: 17s@8 cores -> 59s@32 at 10k rows vs 9.5s@32 at
+# 512 rows on the 400k-page fixture).
+ARROW_MAX_RECORDS_PER_BATCH = 512
+# the fetch join broadcasts the round batch into the pages scan only while
+# it fits (<= this many rows), else falls back to a shuffle-hash join (batch
+# side builds) — a 10^8-row batch must never be broadcast
+FETCH_BROADCAST_LIMIT = 1_000_000
 
 
 @contextmanager
@@ -114,10 +127,9 @@ class Engine:
         ship_package(spark)  # the in-process analogue of --py-files
         self.spark = spark
         self.cfg = cfg
-        # blob-heavy UDF stages need small Arrow batches (see Config)
         spark.conf.set(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
-            str(cfg.arrow_max_records_per_batch),
+            str(ARROW_MAX_RECORDS_PER_BATCH),
         )
         # Ephemeral store mode (reference src/sqlite.rs:9-14 with
         # sqlite_enabled=false: the crawler runs, nothing persists, state
@@ -191,13 +203,14 @@ class Engine:
         # driver-side frontier-size estimate (None = unknown -> always trim)
         fs = self.catalog.extra("frontier_size")
         self.frontier_size = int(fs) if fs is not None else None
-        bloom_path = self.catalog.extra("bloom")
-        if bloom_path and os.path.exists(bloom_path) and not fresh_seen:
-            self.bloom = Bloom.load(
-                bloom_path, cfg.bloom_capacity, cfg.bloom_fpp
-            )
-        else:
-            self.bloom = Bloom(cfg.bloom_capacity, cfg.bloom_fpp)
+        # the bloom is a cache of the committed seen set, rebuilt here and
+        # never persisted; a fresh store has no seen table and runs no job
+        self.bloom = Bloom(cfg.bloom_capacity, cfg.bloom_fpp)
+        if not fresh_seen:
+            with job_label(spark, "init"):
+                seen = self.catalog.read("seen")
+                if seen is not None:
+                    self.bloom.add_dataframe(seen, sha1_col="sha1")
         if fresh_seen and self.catalog.committed_round >= 0:
             # reference process restart: seen set was in-memory and is lost;
             # visited/is_complete persists and gates re-crawl (Q5).
@@ -233,9 +246,9 @@ class Engine:
 
     def _small_side(self, rows: int):
         """The join rule for a small side joined into the pages scan:
-        broadcast it while it has at most ``fetch_broadcast_limit`` rows,
+        broadcast it while it has at most ``FETCH_BROADCAST_LIMIT`` rows,
         else hint a shuffle-hash join with it as the build side."""
-        if rows <= self.cfg.fetch_broadcast_limit:
+        if rows <= FETCH_BROADCAST_LIMIT:
             return F.broadcast
         return lambda d: d.hint("shuffle_hash")
 
@@ -439,8 +452,7 @@ class Engine:
             )
         batch = (
             frontier_mod.select_batch(
-                frontier, trim, cfg.scheduling, cfg.per_host_quota,
-                cfg.salt_buckets,
+                frontier, trim, cfg.scheduling, cfg.per_host_quota
             )
             .observe(batch_obs, *obs_exprs)
             .localCheckpoint()
@@ -474,7 +486,7 @@ class Engine:
 
         # --- fetch-simulation (J1). Small batches broadcast INTO the pages
         # scan (pages side streams, no shuffle); batches beyond
-        # fetch_broadcast_limit switch to a shuffle-hash join with the batch
+        # FETCH_BROADCAST_LIMIT switch to a shuffle-hash join with the batch
         # as build side — a 10^8-row round batch must never be broadcast.
         # The fused page UDF then moves each html binary across Arrow
         # exactly once, and only text/links survive ---
@@ -815,12 +827,6 @@ class Engine:
         # deltas under a lock and nothing publishes until commit). The
         # counts from the stats job let drain rounds SKIP empty-side write
         # jobs entirely — a round with no images launches no images job ---
-        bloom_path = os.path.join(self.catalog.root, f"bloom-{r:06d}.npy")
-
-        def _bloom_task():
-            self.bloom.add_dataframe(new_seen, sha1_col="sha1")
-            self.bloom.save(bloom_path)
-
         tasks = [
             lambda: self.catalog.append(
                 "visited_ops", visits.unionByName(block_ops), r
@@ -828,11 +834,9 @@ class Engine:
         ]
         if fetched_n > 0:
             tasks.append(lambda: self.catalog.append("fetched", fetched, r))
-        wrote_bloom = False
         if stats["cand_n"] > 0:
             tasks.append(lambda: self.catalog.append("seen", new_seen, r))
-            tasks.append(_bloom_task)
-            wrote_bloom = True
+            tasks.append(lambda: self.bloom.add_dataframe(new_seen, "sha1"))
         if stats["child_n"] > 0:
             tasks.append(lambda: self.catalog.append("edges", edges, r))
             # frontier is adds-only: O(children) written per round; visited
@@ -877,9 +881,6 @@ class Engine:
                     "total_visited": new_total,
                     "frontier_size": new_frontier_size,
                     "queued_seeds": sorted(queued_after),
-                    # an all-miss round leaves the bloom (and its snapshot
-                    # pointer) unchanged
-                    **({"bloom": bloom_path} if wrote_bloom else {}),
                 },
             )
         except BaseException:
@@ -918,20 +919,6 @@ class Engine:
                 self._fold_frontier(r)
             else:
                 self.catalog.compact(t, r)
-        # disk GC: bloom snapshots strictly older than the one the manifest
-        # references (rounds may skip bloom writes, so "r - 2" is not safe)
-        ref_bloom = self.catalog.extra("bloom")
-        if ref_bloom:
-            import glob as _glob
-
-            for p in _glob.glob(
-                os.path.join(self.catalog.root, "bloom-*.npy")
-            ):
-                if p < ref_bloom:
-                    try:
-                        os.remove(p)
-                    except OSError:
-                        pass
         return True
 
     # ------------------------------------------------------------------
@@ -1035,11 +1022,7 @@ class Engine:
                 F.lit(r - 1).alias("round"),
             )
             self.catalog.append("seen", new_seen, r - 1)
-            bloom_path = os.path.join(
-                self.catalog.root, f"bloom-{r - 1:06d}i.npy"
-            )
             self.bloom.add_dataframe(new_seen, sha1_col="sha1")
-            self.bloom.save(bloom_path)
             requeued = {
                 row["canon"]
                 for row in new_rows.filter(
@@ -1057,7 +1040,6 @@ class Engine:
                     "ingested_candidates_batch": stream_mark,
                     "ingest_seed_seq": seq0 + n,
                     "frontier_size": new_size,
-                    "bloom": bloom_path,
                     "queued_seeds": sorted(queued_after),
                 },
             )

@@ -30,6 +30,9 @@ from pyspark.sql import functions as F
 # silently truncating, so order stays total for arbitrarily wide pages
 _WIDTH = 4
 
+# salt fan-out of the two-phase politeness rank (host-skew mitigation)
+SALT_BUCKETS = 8
+
 
 def _extend_hex(h: str) -> str:
     """Order-preserving variable-width hex: <=4 digits are zero-padded;
@@ -76,7 +79,6 @@ def select_batch(
     remaining_cap: int | None,
     scheduling: str,
     per_host_quota: int | None,
-    salt_buckets: int = 1,
 ) -> DataFrame:
     """Pick this round's visit batch from the frontier.
 
@@ -90,22 +92,21 @@ def select_batch(
     the trim (the engine passes None whenever the cap cannot bind this
     round, avoiding a pointless global sort of the frontier).
 
-    Host skew: with ``salt_buckets > 1`` the rank runs in two phases —
-    top-quota within (host, salt) first, then exact top-quota per host over
+    Host skew: the rank runs in two phases — top-quota within
+    (host, ``SALT_BUCKETS`` salts) first, then exact top-quota per host over
     the <= quota*salt survivors — so a mega-host's frontier rows never
     funnel through a single window partition (north-rule salting)."""
     if scheduling == "dfs-parity":
         return frontier.orderBy("priority").limit(1)
     out = frontier
     if per_host_quota:
-        if salt_buckets and salt_buckets > 1:
-            salt = F.pmod(F.xxhash64("canon"), F.lit(salt_buckets))
-            w1 = Window.partitionBy("host", salt).orderBy("priority")
-            out = (
-                out.withColumn("__r1", F.row_number().over(w1))
-                .filter(F.col("__r1") <= per_host_quota)
-                .drop("__r1")
-            )
+        salt = F.pmod(F.xxhash64("canon"), F.lit(SALT_BUCKETS))
+        w1 = Window.partitionBy("host", salt).orderBy("priority")
+        out = (
+            out.withColumn("__r1", F.row_number().over(w1))
+            .filter(F.col("__r1") <= per_host_quota)
+            .drop("__r1")
+        )
         w_host = Window.partitionBy("host").orderBy("priority")
         out = (
             out.withColumn("__hr", F.row_number().over(w_host))

@@ -21,6 +21,9 @@ rows or the folded rows, never a mix. Checked here:
   frontier append and a fold;
 - the in-process round pointer after ``run()`` is the one a reopened
   Engine starts at;
+- the bloom is a cache of the committed ``seen`` table: a reopened Engine
+  rebuilds the same bits, no snapshot file is written, and the rebuild
+  collects at most one bitmap per default-parallelism slot;
 - a store written with the removed host-bucketed layout is refused.
 
 Kills are simulated by monkeypatching ``Catalog``, the parquet writer,
@@ -449,6 +452,54 @@ def test_round_pointer_matches_reopened_store(spark, data, tmp_path):
     eng = _engine(spark, data, tmp_path / "wd")
     eng.run(max_rounds=1)
     assert eng.round == _engine(spark, data, tmp_path / "wd").round
+
+
+def test_reopen_rebuilds_bloom_from_seen(spark, data, tmp_path):
+    """After a round and an ingest, a reopened Engine rebuilds the bloom
+    from ``seen`` with the same bits the first Engine held, the ingested
+    canon probes positive, and the store root holds only the manifest and
+    the table directories: no bloom snapshot is written."""
+    root = tmp_path / "wd"
+    eng = _engine(spark, data, root)
+    eng.run(max_rounds=1)
+    cand = _candidates(
+        spark, tmp_path / "cand", ["https://isle.example/p0.html"]
+    )
+    assert eng.ingest_candidates(cand) == 1
+    eng2 = _engine(spark, data, root)
+    assert (eng2.bloom.bits == eng.bloom.bits).all()
+    sha1 = urlkit.sha1_hex(pd.Series(["isle.example/p0.html"]))
+    assert eng2.bloom.might_contain(sha1).all()
+    assert sorted(os.listdir(root)) == sorted(
+        ["_manifest.json", *eng2.catalog.state["tables"]]
+    )
+
+
+def test_bloom_build_collects_bounded_bitmaps(spark, monkeypatch):
+    """``Bloom.add_dataframe`` ships one m/8-byte bitmap per partition it
+    builds, so an input of 3x the default parallelism in partitions (a
+    large ``seen`` table) still sends the driver at most one bitmap per
+    parallelism slot, and every key probes positive."""
+    from crabspark.seen import Bloom
+
+    n = spark.sparkContext.defaultParallelism
+    df = spark.range(0, 30 * n, numPartitions=3 * n).select(
+        F.sha1(F.col("id").cast("string")).alias("sha1")
+    )
+    assert df.rdd.getNumPartitions() == 3 * n
+    calls = []
+    real_or = Bloom.or_bitmap
+
+    def counting_or(self, bits):
+        calls.append(len(bits))
+        real_or(self, bits)
+
+    monkeypatch.setattr(Bloom, "or_bitmap", counting_or)
+    bloom = Bloom(1_000, 0.01)
+    bloom.add_dataframe(df, sha1_col="sha1")
+    assert 0 < len(calls) <= n
+    keys = pd.Series([r["sha1"] for r in df.collect()])
+    assert bloom.might_contain(keys).all()
 
 
 def test_bucketed_store_is_refused(spark, data, tmp_path):

@@ -82,11 +82,12 @@ def test_robots_off(spark, fixture_paths, tmp_path):
     assert "mega1.com/moz-block/secret.html" in visited
 
 
-def test_shuffle_fetch_join(spark, fixture_paths, tmp_path):
-    """fetch_broadcast_limit=0: every batch is past the broadcast limit,
-    so the crawl runs the shuffle-hash fetch join — the 10^8-row-batch
-    scale mode — with identical output."""
-    cfg = cfg_with(free_crawl=True, fetch_broadcast_limit=0)
+def test_shuffle_fetch_join(spark, fixture_paths, tmp_path, monkeypatch):
+    """Broadcast limit 0: every batch is past it, so the crawl runs the
+    shuffle-hash fetch join — the 10^8-row-batch scale mode — with
+    identical output."""
+    monkeypatch.setattr("crabspark.engine.FETCH_BROADCAST_LIMIT", 0)
+    cfg = cfg_with(free_crawl=True)
     compare(spark, fixture_paths, tmp_path, cfg, "shufflejoin")
 
 
@@ -164,14 +165,12 @@ def test_bucketed_pages_fetch_join(spark, fixture_paths, tmp_path):
 
 
 def test_cuckoo_seen_filter_identical_output(spark, fixture_paths, tmp_path):
-    """The cuckoo seen-filter backend is gone. A store whose seen-filter
-    snapshot it wrote (a "kind" entry, no bits) must refuse to resume with
-    a ValueError naming the cause, not a KeyError, and leave the crawl's
-    output identical; the way out the message names (fresh_seen=True)
-    must open the store."""
+    """The seen filter is a cache of the ``seen`` table, rebuilt at open.
+    A store left with a seen-filter snapshot in the removed cuckoo layout
+    (a "kind" entry, no bits) and a ``bloom`` manifest extra naming it
+    opens without ``fresh_seen``, ignores both, and rebuilds the same bits
+    the crawling Engine held; its output stays identical to the oracle."""
     import numpy as np
-
-    from crabspark.seen import Bloom
 
     cfg = cfg_with(free_crawl=True)
     data = gen_pages.generate(n_pages=N_PAGES, seed=42)
@@ -183,22 +182,21 @@ def test_cuckoo_seen_filter_identical_output(spark, fixture_paths, tmp_path):
     )
     eng = Engine(spark, cfg, store, **paths)
     eng.run()
-    snap = eng.catalog.extra("bloom")
-    assert snap
-    # the removed backend's snapshot layout, written over the bloom's
+    # the removed backend's snapshot layout, named by a committed extra
+    snap = os.path.join(store, "bloom-000099.npy")
     np.savez(snap + ".tmp", kind=np.array(["cuckoo"]),
              table=np.zeros((1024, 4), dtype=np.uint16), nb=np.int64(1024),
              saturated=np.int64(0), n_inserted=np.int64(0),
              n_deleted=np.int64(0))
     os.replace(snap + ".tmp.npz", snap)
-    with pytest.raises(ValueError, match="cuckoo"):
-        Engine(spark, cfg, store, **paths)
-    vis = {r["url"]: r for r in eng.read_visited().collect()}
+    eng.catalog.commit(eng.catalog.committed_round, {"bloom": snap})
+    eng2 = Engine(spark, cfg, store, **paths)
+    assert eng.bloom.bits.any()
+    assert (eng2.bloom.bits == eng.bloom.bits).all()
+    vis = {r["url"]: r for r in eng2.read_visited().collect()}
     assert set(vis) == set(golden.visited)
     for url, row in golden.visited.items():
         assert vis[url]["is_blocked"] == row["is_blocked"], url
         assert vis[url]["is_complete"] == row["is_complete"], url
-    seen = {r["url"] for r in eng.read_seen().collect()}
+    seen = {r["url"] for r in eng2.read_seen().collect()}
     assert seen == golden.seen
-    eng2 = Engine(spark, cfg, store, fresh_seen=True, **paths)
-    assert isinstance(eng2.bloom, Bloom)

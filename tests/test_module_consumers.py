@@ -13,6 +13,11 @@ Knobs: every ``Config`` field must be read as an attribute somewhere in
 nothing reads is a knob that changes nothing. The named allow-list holds
 the reference-parity fields that only load.
 
+Persisted state: every literal key of a dict passed to a catalog's
+``commit(...)`` or ``compact(...)`` in ``crabspark/`` must be read by an
+``extra("<key>")`` call somewhere in ``crabspark/``; a manifest extra
+nothing reads is state written for no reader.
+
 Bench scripts: every ``bench/*.py`` must be named by its path in a test or
 a ``perfbench/`` file, or sit on a named allow-list with the reason it
 stays; a script nothing runs goes. No Spark.
@@ -133,6 +138,51 @@ def test_every_config_field_has_a_consumer():
     # an allow-listed field that gained a reader leaves the list
     stale = sorted(set(LOAD_ONLY_FIELDS) & reads)
     assert not stale, f"allow-listed fields that are now read: {stale}"
+
+
+def _receiver_name(node: ast.expr) -> str:
+    if isinstance(node, ast.Name):
+        return node.id
+    if isinstance(node, ast.Attribute):
+        return node.attr
+    return ""
+
+
+def _manifest_extras() -> tuple[dict[str, str], set[str]]:
+    """(literal extra keys committed -> first file:line, keys read)."""
+    written: dict[str, str] = {}
+    read: set[str] = set()
+    for path in sorted((REPO / "crabspark").glob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and _receiver_name(node.func.value).endswith("catalog")
+            ):
+                continue
+            args = [*node.args, *(k.value for k in node.keywords)]
+            if node.func.attr == "extra":
+                if args and isinstance(args[0], ast.Constant):
+                    read.add(args[0].value)
+            elif node.func.attr in ("commit", "compact"):
+                for arg in args:
+                    for d in ast.walk(arg):
+                        if not isinstance(d, ast.Dict):
+                            continue
+                        for key in d.keys:
+                            if isinstance(key, ast.Constant):
+                                written.setdefault(
+                                    key.value, f"{path.name}:{key.lineno}"
+                                )
+    return written, read
+
+
+def test_every_manifest_extra_has_a_reader():
+    written, read = _manifest_extras()
+    assert written, "no committed extras found: the walk is broken"
+    unread = sorted(f"{k} ({at})" for k, at in written.items() if k not in read)
+    assert not unread, f"manifest extras nothing reads: {unread}"
 
 
 # bench scripts no test or perfbench file names, with the reason each stays

@@ -1,11 +1,9 @@
 """Bloom prefilter unit tests (numpy-only — no Spark session)."""
 
 import hashlib
-import os
 
 import numpy as np
 import pandas as pd
-import pytest
 
 from crabspark.seen import Bloom, _params
 
@@ -42,17 +40,6 @@ def test_or_merge_equals_union():
     assert a.might_contain(pd.Series(np.concatenate([ka, kb]))).all()
 
 
-def test_save_load_roundtrip(tmp_path):
-    b = Bloom(capacity=1_000, fpp=0.01)
-    keys = sha1s(500)
-    b.add_array(keys)
-    p = str(tmp_path / "bloom.npy")
-    b.save(p)
-    b2 = Bloom.load(p, 1_000, 0.01)
-    assert (b2.bits == b.bits).all()
-    assert b2.might_contain(pd.Series(keys)).all()
-
-
 def test_params_sane():
     m, k = _params(1_000_000, 0.01)
     assert m % 64 == 0
@@ -65,18 +52,6 @@ def test_empty_inputs():
     b.add_array(np.array([], dtype=object))
     out = b.might_contain(pd.Series([], dtype=object))
     assert len(out) == 0
-
-
-def test_load_keeps_saved_geometry(tmp_path):
-    # resume with a CHANGED capacity must honor the saved bitmap's (m, k)
-    b = Bloom(capacity=1_000, fpp=0.01)
-    keys = sha1s(800)
-    b.add_array(keys)
-    p = str(tmp_path / "bloom.npy")
-    b.save(p)
-    b2 = Bloom.load(p, capacity=4_000_000, fpp=0.001)  # different config
-    assert (b2.m, b2.k) == (b.m, b.k)
-    assert b2.might_contain(pd.Series(keys)).all()  # no false negatives
 
 
 def test_uppercase_hex_probes_same_bits():
@@ -111,14 +86,3 @@ def test_scatter_hybrid_paths_bit_identical():
         chunked.add_array(chunk)
     assert (whole.bits == chunked.bits).all()
     assert whole.might_contain(pd.Series(keys[:1000])).all()
-
-
-def test_cuckoo_snapshot_fails_clearly(tmp_path):
-    """Stores written by the removed cuckoo backend hold a "kind" entry and
-    no bits; resuming one must say so instead of raising KeyError."""
-    path = str(tmp_path / "bloom-000003.npy")
-    np.savez(path + ".tmp", kind=np.array(["cuckoo"]),
-             table=np.zeros((4, 4), dtype=np.uint16), nb=np.int64(4))
-    os.replace(path + ".tmp.npz", path)
-    with pytest.raises(ValueError, match="cuckoo"):
-        Bloom.load(path, capacity=1_000, fpp=0.01)
