@@ -1745,12 +1745,12 @@ FROM t
 """
 
 
-def quality_verdict_expr():
-    """Gopher-style verdict Column over a ``toks`` array column — first
-    failing rule wins; float features rounded to 4 places BEFORE
-    thresholding so verdict branches are bit-stable across Spark and the
-    DuckDB oracle. Shared by the batch q_quality_filter and the streaming
-    quality gate (one definition, two execution modes)."""
+def q_quality_filter(spark, sf_dir):
+    """Gopher-style document quality VERDICT (the keep/drop gate a
+    training-data pipeline runs after scoring): first failing rule wins;
+    float features rounded to 4 places BEFORE thresholding so verdict
+    branches are bit-stable across Spark and the DuckDB oracle."""
+    d = _ts(spark, sf_dir, "documents").withColumn("toks", F.expr(_TOK_SPARK))
     stop = ["the", "a", "and", "of", "to", "in", "is", "on"]
     stop_arr = F.array(*[F.lit(s) for s in stop])
     nt = F.size("toks")
@@ -1763,21 +1763,13 @@ def quality_verdict_expr():
         F.size(F.filter("toks", lambda x: F.array_contains(stop_arr, x))) / nt,
         4,
     )
-    return (
+    verdict = (
         F.when(nt < 10, "too_short")
         .when(nt > 100_000, "too_long")
         .when((mtl < 2.0) | (mtl > 12.0), "tok_len")
         .when(sr < 0.02, "low_stopword")
         .otherwise("keep")
     )
-
-
-def q_quality_filter(spark, sf_dir):
-    """Gopher-style document quality VERDICT (the keep/drop gate a
-    training-data pipeline runs after scoring): first failing rule wins —
-    see quality_verdict_expr for the shared rule definition."""
-    d = _ts(spark, sf_dir, "documents").withColumn("toks", F.expr(_TOK_SPARK))
-    verdict = quality_verdict_expr()
     return d.select(
         "doc_id",
         verdict.alias("verdict"),

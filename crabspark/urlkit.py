@@ -9,8 +9,6 @@ All semantics are bug-for-bug with the reference:
                              as used by is_valid_site (reference src/tools.rs:168-187)
 - ``valid_mask``          <- the allow/deny predicate (reference src/tools.rs:172-173;
                              exact domain equality, no subdomain match)
-- ``canonicalize_rfc``    <- rebuild-only RFC-3986-style normalization for the
-                             scale path (north rule); not used in parity mode.
 
 Vectorization strategy: every branch of the reference's resolve ladder is
 selected with pandas masks computed over the whole Arrow batch; the common
@@ -471,20 +469,6 @@ def canonicalize(urls: pd.Series) -> pd.Series:
             rest = rest[:qi]
         out.append(rest.rstrip("/"))
     return pd.Series(out, index=urls.index, dtype=object)
-
-
-def canonicalize_rfc(urls: pd.Series) -> pd.Series:
-    """Rebuild-only scale-mode canonicalizer (north rule): lowercase
-    scheme+host, strip default port, strip fragment, collapse duplicate
-    slashes in the path, drop trailing slash; keeps scheme and query (unlike
-    the reference regex, which conflates 'http' and 'https' and all queries).
-    Used for the 10^10-frontier seen-key where collision semantics matter."""
-    parsed = parse_serialize(urls)
-    s = parsed["ser"].astype(object)
-    filled = s.fillna("")
-    collapsed = filled.str.replace(r"(?<!:)/{2,}", "/", regex=True)
-    collapsed = collapsed.str.replace(r"/+(\?|$)", r"\1", regex=True)
-    return collapsed.where(s.notna(), None)
 
 
 def sha1_hex(urls: pd.Series) -> pd.Series:

@@ -265,7 +265,7 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
     files = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.warc*")
-        .option("recursiveFileLookup", "true")  # per-batch export subdirs
+        .option("recursiveFileLookup", "true")  # archives in subdirs
         .load(path)
         # the glob also matches CDX sidecars (part-N.warc.gz.cdx) the
         # write side emits — drop them at the listing, not executor-side
@@ -300,7 +300,7 @@ def surt_key(url: str) -> str:
 
 
 # CDX fields are space-separated: a url with a space would split into too
-# many fields and read_cdx would drop the whole record. '%' is escaped too,
+# many fields and read_cdx would reject the whole line. '%' is escaped too,
 # so that a url already holding a literal '%20' decodes back unchanged.
 _CDX_ESCAPE = str.maketrans({"%": "%25", " ": "%20"})
 
@@ -402,61 +402,6 @@ def write_warc(
     return len(manifest)
 
 
-def write_wet(
-    df: DataFrame, outdir: str, gzip_out: bool = True, prefix: str = "part"
-) -> int:
-    """pages DataFrame -> WET files (`WARC-Type: conversion`, bare
-    ``text/plain`` payload = the ``text`` column) — the format Common
-    Crawl publishes extracted text in, and the cheapest interchange shape
-    for a text-only LLM-corpus pipeline: read_warc round-trips it with
-    ``text`` byte-identical (no re-extraction pass). Same
-    file-per-partition sink shape as write_warc."""
-    from crabspark.shipping import ship_package
-
-    ship_package(df.sparkSession)  # the dump closure resolves via the
-    # crabspark module on executors (cloudpickle pickles module-level
-    # closures by reference) — same shipping contract as read_warc
-    os.makedirs(outdir, exist_ok=True)
-
-    def dump(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        recs: list[tuple[str, str, bytes]] = []
-        for pdf in it:
-            for row in pdf.itertuples(index=False):
-                text = (row.text or "").encode("utf-8")
-                ts = (
-                    pd.Timestamp(row.warc_ts).strftime("%Y-%m-%dT%H:%M:%SZ")
-                    if pd.notna(row.warc_ts)
-                    else "1970-01-01T00:00:00Z"
-                )
-                head = (
-                    "WARC/1.0\r\n"
-                    "WARC-Type: conversion\r\n"
-                    f"WARC-Target-URI: {row.url}\r\n"
-                    f"WARC-Date: {ts}\r\n"
-                    "Content-Type: text/plain\r\n"
-                    f"Content-Length: {len(text)}"
-                ).encode()
-                recs.append(
-                    (row.url, _cdx_ts(row.warc_ts), head + _SEP + text + _SEP)
-                )
-        if recs:
-            name = f"{prefix}-{pid:05d}.warc.wet" + (".gz" if gzip_out else "")
-            _write_archive_with_cdx(outdir, name, recs, gzip_out)
-            yield pd.DataFrame({"file": [name], "records": [len(recs)]})
-
-    manifest = df.mapInPandas(dump, "file string, records long").collect()
-    return len(manifest)
-
-
-CDX_SCHEMA = (
-    "urlkey string, cdx_ts string, url string, file string, "
-    "offset long, length long"
-)
-
-
 def read_cdx(spark: SparkSession, path: str) -> DataFrame:
     """CDX sidecar files -> index DataFrame (urlkey, cdx_ts, url, file,
     offset, length), the Common-Crawl companion artifact enabling random
@@ -472,7 +417,15 @@ def read_cdx(spark: SparkSession, path: str) -> DataFrame:
     parts = F.split(F.col("value"), " ")
     return (
         lines.filter(~F.col("value").startswith("CDX "))
-        .filter(F.size(parts) == 6)
+        # a line without 6 fields fails the read: dropping it would
+        # return an index silently missing its record
+        .filter(
+            F.when(F.size(parts) == 6, True).otherwise(
+                F.raise_error(
+                    F.concat(F.lit("malformed CDX line: "), F.col("value"))
+                )
+            )
+        )
         .select(
             _cdx_unescape(parts[0]).alias("urlkey"),
             parts[1].alias("cdx_ts"),

@@ -20,7 +20,12 @@ nothing reads is state written for no reader.
 
 Bench scripts: every ``bench/*.py`` must be named by its path in a test or
 a ``perfbench/`` file, or sit on a named allow-list with the reason it
-stays; a script nothing runs goes. No Spark.
+stays; a script nothing runs goes.
+
+Functions: every public top-level function and every public method of a
+public class in ``crabspark/*.py`` must be referenced — by a name, an
+attribute or an import — in non-test code outside its own body, or sit on
+a named allow-list with the reason it stays. No Spark.
 """
 
 from __future__ import annotations
@@ -105,9 +110,7 @@ LOAD_ONLY_FIELDS = {
                    "replace it",
     "crawler_request_timeout": "the fetch-simulation join has no "
                                "per-request socket to time out",
-    "crawler_request_delay_ms": "the crawl loop has no per-request sleep; "
-                                "streaming.start_polite_gate takes the "
-                                "delay as its own argument",
+    "crawler_request_delay_ms": "the crawl loop has no per-request sleep",
     "sqlite_path": "the store is a snapshot catalog rooted at the workdir, "
                    "not a sqlite file",
     "log_relative_paths": "the engine logs no file paths",
@@ -213,3 +216,100 @@ def test_every_bench_script_has_a_consumer():
     # an allow-listed script that is gone, or now named, leaves the list
     stale = sorted(set(BENCH_ALLOW_LIST) - (scripts - named))
     assert not stale, f"stale bench allow-list entries: {stale}"
+
+
+# public functions no non-test code references, with the reason each stays
+FUNCTION_ALLOW_LIST = {
+    "streaming.start_page_ingest": "the stream-to-frontier candidate "
+                                   "ingest, which only tests drive; its "
+                                   "keep-or-delete decision is ROADMAP "
+                                   "item 9's second change",
+    "streaming.start_warc_ingest": "the candidate ingest's archive source "
+                                   "(see start_page_ingest)",
+    "engine.Engine.ingest_candidates": "the candidate ingest's frontier "
+                                       "fold (see start_page_ingest)",
+    "engine.Engine.visit_log": "tests read the crawl's visit order from it",
+    "tables.Catalog.read_at": "tests read a committed round's state "
+                              "through it",
+    "tables.Catalog.snapshots": "tests list a table's committed rounds "
+                                "through it",
+    "warc.write_warc": "writes the WARC fixtures of the WARC tests and of "
+                       "the bin/warc_ingest.py spark-submit test",
+    "warc.read_cdx": "the read side of the CDX sidecars write_warc writes",
+    "warc.fetch_record": "the random-access read of the CDX sidecars "
+                         "write_warc writes",
+    "extract.extract_links": "the link extractor of tests/oracle.py",
+    "queries.train_ivf_centroids": "the provenance of the frozen literals "
+                                   "in ivf_centroids.py, which a test "
+                                   "re-trains",
+}
+
+
+def _public_functions() -> dict[str, tuple[Path, ast.AST]]:
+    """``module.func`` / ``module.Class.method`` -> (file, def node)."""
+    defs = {}
+    for path in sorted((REPO / "crabspark").glob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for node in tree.body:
+            if isinstance(node, ast.ClassDef) and not node.name.startswith("_"):
+                members = [(f"{node.name}.", m) for m in node.body]
+            else:
+                members = [("", node)]
+            for prefix, fn in members:
+                if isinstance(
+                    fn, (ast.FunctionDef, ast.AsyncFunctionDef)
+                ) and not fn.name.startswith("_"):
+                    defs[f"{path.stem}.{prefix}{fn.name}"] = (path, fn)
+    return defs
+
+
+def _function_references() -> dict[str, list[tuple[Path, int]]]:
+    """name -> (file, line) of every Name, Attribute or import alias in the
+    non-test code; docstrings and comments are no nodes, so never count."""
+    files = [
+        *(REPO / "crabspark").glob("*.py"),
+        *(REPO / "bin").glob("*.py"),
+        *(REPO / "bench").glob("*.py"),
+        *(REPO / "perfbench").rglob("*.py"),
+        REPO / "bench.py",
+        REPO / "__spark_entry__.py",
+    ]
+    refs: dict[str, list[tuple[Path, int]]] = {}
+    for path in files:
+        if path.name.startswith("test_"):
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if isinstance(node, ast.Name):
+                name = node.id
+            elif isinstance(node, ast.Attribute):
+                name = node.attr
+            elif isinstance(node, ast.alias):
+                name = node.name.rsplit(".", 1)[-1]
+            else:
+                continue
+            refs.setdefault(name, []).append((path, node.lineno))
+    return refs
+
+
+def _uncalled_functions() -> set[str]:
+    refs = _function_references()
+    return {
+        key
+        for key, (path, fn) in _public_functions().items()
+        if not any(
+            # a reference inside the function's own body is no caller
+            not (f == path and fn.lineno <= line <= fn.end_lineno)
+            for f, line in refs.get(fn.name, [])
+        )
+    }
+
+
+def test_every_public_function_has_a_consumer():
+    defs = _public_functions()
+    assert "engine.Engine.run" in defs, "the def walk is broken"
+    uncalled = _uncalled_functions()
+    orphans = sorted(uncalled - set(FUNCTION_ALLOW_LIST))
+    assert not orphans, f"public functions nothing calls: {orphans}"
+    # an allow-listed function that is gone, or now called, leaves the list
+    stale = sorted(set(FUNCTION_ALLOW_LIST) - uncalled)
+    assert not stale, f"stale function allow-list entries: {stale}"

@@ -131,7 +131,7 @@ def test_spark_submit_py_files_multi_executor(submit_fixture, tmp_path):
 
 def test_warc_ingest_cli_spark_submit(tmp_path):
     """bin/warc_ingest.py through real spark-submit --py-files from a
-    neutral cwd: guards the write_warc/write_wet executor-shipping
+    neutral cwd: guards the write_warc/read_warc executor-shipping
     regression (closures pickle by reference to the crabspark module, so
     BOTH directions must ship the package themselves)."""
     import pandas as pd

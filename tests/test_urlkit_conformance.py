@@ -213,20 +213,6 @@ def test_sha1_hex():
     assert got.iloc[1] is None
 
 
-def test_canonicalize_rfc_idempotent():
-    urls = pd.Series([
-        "HTTPS://Example.com:443//a//b/?q=1",
-        "http://a.com/x/",
-        "not a url",
-    ])
-    once = urlkit.canonicalize_rfc(urls)
-    twice = urlkit.canonicalize_rfc(once)
-    assert once.iloc[0] == "https://example.com/a/b?q=1"
-    assert once.iloc[1] == "http://a.com/x"
-    assert once.iloc[2] is None
-    assert list(once.fillna("∅")) == list(twice.fillna("∅"))
-
-
 def test_invalid_port_rejected():
     # rust-url: invalid port => parse error (reference drops the link)
     got = urlkit.parse_serialize(pd.Series([

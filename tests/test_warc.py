@@ -19,10 +19,15 @@ from crabspark.warc import _http_payload, parse_warc, read_warc, write_warc
 from tests.sparkutil import get_spark
 
 
-def _rec(wtype: str, uri: str | None, body: bytes, date="2024-05-01T12:30:00Z"):
+def _rec(
+    wtype: str, uri: str | None, body: bytes, date="2024-05-01T12:30:00Z",
+    ctype: str | None = None,
+):
     head = f"WARC/1.0\r\nWARC-Type: {wtype}\r\n"
     if uri:
         head += f"WARC-Target-URI: {uri}\r\n"
+    if ctype:
+        head += f"Content-Type: {ctype}\r\n"
     head += f"WARC-Date: {date}\r\nContent-Length: {len(body)}"
     return head.encode() + b"\r\n\r\n" + body + b"\r\n\r\n"
 
@@ -192,29 +197,25 @@ def test_crawl_over_warc_ingested_pages_matches_oracle(spark, tmp_path):
 
 
 def test_wet_roundtrip_text_byte_identical(spark, tmp_path):
-    """WET export/ingest: conversion records with text/plain payloads —
-    the Common-Crawl extracted-text format. The reader must NOT re-run
-    the html extractor over already-extracted text (whitespace would be
-    re-normalized); round-trip text is byte-identical."""
-    from datetime import datetime
-
-    from crabspark.warc import write_wet
-
-    rows = [
-        ("http://a.example/", datetime(2024, 5, 1, 12, 30),
-         "line one\nline  two   spaced\n\ttabbed café — end"),
-        ("http://b.example/", datetime(2024, 6, 2),
-         "plain"),
-    ]
-    src = spark.createDataFrame(
-        rows, "url string, warc_ts timestamp, text string"
-    ).selectExpr("url", "warc_ts", "cast(null as binary) html", "text",
-                 "cast(null as string) lang")
-    out = os.path.join(str(tmp_path), "wet")
-    assert write_wet(src, out) >= 1
-    assert all(".warc.wet" in f for f in os.listdir(out))
-    back = {r["url"]: r for r in read_warc(spark, out).collect()}
-    for url, ts, text in rows:
+    """WET ingest: conversion records with text/plain payloads — the
+    Common-Crawl extracted-text format, framed one gzip member per
+    record. The reader must NOT re-run the html extractor over
+    already-extracted text (whitespace would be re-normalized); the text
+    comes back byte-identical."""
+    texts = {
+        "http://a.example/": "line one\nline  two   spaced\n\ttabbed café — end",
+        "http://b.example/": "plain",
+    }
+    out = tmp_path / "wet"
+    out.mkdir()
+    (out / "part-00000.warc.wet.gz").write_bytes(b"".join(
+        gzip.compress(_rec("conversion", url, text.encode(),
+                           ctype="text/plain"))
+        for url, text in texts.items()
+    ))
+    back = {r["url"]: r for r in read_warc(spark, str(out)).collect()}
+    assert set(back) == set(texts)
+    for url, text in texts.items():
         assert back[url]["text"] == text           # byte-identical, no
         assert bytes(back[url]["html"]) == text.encode()  # re-extraction
 
@@ -360,6 +361,21 @@ def test_cdx_index_roundtrip_fetch_by_offset(spark, tmp_path):
         body = rec["body"]
         i = r.url.split("/p/")[1].split("?")[0]
         assert f"<html>page {i}</html>".encode() in body
+
+
+def test_read_cdx_rejects_malformed_line(spark, tmp_path):
+    """A CDX line without its 6 fields fails the read, naming the line:
+    dropping it would hand back an index silently missing a record."""
+    from crabspark.warc import read_cdx
+
+    (tmp_path / "part-00000.warc.gz.cdx").write_text(
+        "CDX N b a g V S\n"
+        "com,a)/ 20240501120000 http://a.com/ part-00000.warc.gz 0 120\n"
+        "com,b)/ 20240501120001 http://b.com/ part-00000.warc.gz 120 130\n"
+        "com,c)/ 20240501120002 http://c.com/ part-00000.warc.gz 250\n"
+    )
+    with pytest.raises(Exception, match="malformed CDX line: com,c"):
+        read_cdx(spark, str(tmp_path)).collect()
 
 
 def test_surt_key():
