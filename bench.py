@@ -5,10 +5,11 @@ measurement. Prints exactly ONE JSON line:
    "queries": {name: sec, ...}, "sf": <sf>, "urls_per_sec": <crawl tput>,
    "crawl_runs": [leg wall, ...], "crawl_env": [...],
    "crawl_breakdown": [{"select_s", "pipeline_s", "write_s",
-                        "py_worker_cpu_s"}, ...]}
+                        "py_worker_cpu_s", "compiles", "jobs"}, ...]}
 
 Each crawl leg's breakdown sums Engine.phase_splits over the measured
-crawl's rounds and adds the CPU seconds its Spark Python workers used.
+crawl's rounds, adds the CPU seconds its Spark Python workers used, and
+sums the Janino compiles and Spark jobs its ``metrics`` rows record.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS  (default 32),
@@ -52,6 +53,10 @@ def get_spark(cpus: int) -> SparkSession:
         .config(
             "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2"
         )
+        # rounds past engine.INTERPRET_MAX_ROWS rows compile about 115
+        # classes each, more than the default 100-entry cache holds (a
+        # static conf: it binds at session build)
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         # 16g, not bigger: giant heaps tripled per-round floors at
         # local[32] on a 32-core box (BENCH/BASELINE.md, historical)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
@@ -130,6 +135,8 @@ def bench_crawl(spark, n_pages: int) -> dict:
     wall seconds, URLs/s, per-phase second sums and Python-worker CPU
     seconds. The fixture is generated once and cached under .bench_data/
     (gitignored)."""
+    from pyspark.sql import functions as F
+
     from crabspark.config import Config
     from crabspark.engine import Engine
     from fixtures import gen_pages
@@ -179,11 +186,16 @@ def bench_crawl(spark, n_pages: int) -> dict:
             k: round(sum(p[k] for p in eng.phase_splits), 3)
             for k in ("select_s", "pipeline_s", "write_s")
         }
+        counts = eng.catalog.read("metrics").agg(
+            F.sum("compiles").alias("compiles"), F.sum("jobs").alias("jobs")
+        ).first()
         return {
             "wall": round(wall, 3),
             "ups": round(res["visited"] / wall, 2),
             **phases,
             "py_worker_cpu_s": round(cpu, 2),
+            "compiles": int(counts["compiles"]),
+            "jobs": int(counts["jobs"]),
         }
     finally:
         shutil.rmtree(work, ignore_errors=True)
@@ -348,7 +360,8 @@ def main() -> None:
             crawl_env.append(_leg_env(before, after, leg["wall"]))
             crawl_breakdown.append({
                 k: leg[k] for k in
-                ("select_s", "pipeline_s", "write_s", "py_worker_cpu_s")
+                ("select_s", "pipeline_s", "write_s", "py_worker_cpu_s",
+                 "compiles", "jobs")
             })
             return leg["ups"]
 

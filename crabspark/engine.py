@@ -50,7 +50,19 @@ Scale design notes (10^10 frontier):
   scan to the batch's buckets was built and removed: a batch of B >= 4n
   URLs hits over 98% of n buckets (1 - (1 - 1/n)^B), so the rounds that
   hold nearly all the visits scanned every bucket, and it was not faster;
-- every count the loop needs is computed in one aggregate job per round.
+- every count the loop needs is computed in one aggregate job per round;
+- small rounds are interpreted, not compiled: each round and ``finalize``
+  run with whole-stage codegen off and the expression factories in
+  NO_CODEGEN mode while ``max(pages rows, visited + frontier)`` is below
+  ``INTERPRET_MAX_ROWS``. A round needs about 115 generated classes, more
+  than Spark's 100-entry codegen cache holds, so every round recompiled
+  what the last one compiled (115-135 compiles per round at 6.6-10 ms
+  each on 4 vCPUs). On the 2000-page, 4-round crawl after a prime round
+  this took compiles per crawl from 480-517 to 0-2 and the JVM's CPU
+  time from 44-51 s to 33-41 s, with identical output. At 2M rows
+  interpretation costs +0.2-0.3 s on the fetch join and +0.3-0.55 s on a
+  group-by, so bigger rounds keep codegen (and a session should be built
+  with a ``spark.sql.codegen.cache.maxEntries`` that holds them).
 
 Resume: the catalog manifest names the last committed round; an interrupted
 round leaves only unreferenced files. An Engine opened over the store reads
@@ -95,6 +107,15 @@ ARROW_MAX_RECORDS_PER_BATCH = 512
 # it fits (<= this many rows), else falls back to a shuffle-hash join (batch
 # side builds) — a 10^8-row batch must never be broadcast
 FETCH_BROADCAST_LIMIT = 1_000_000
+# rounds and finalize run interpreted (INTERPRETED_CONFS) while
+# max(pages rows, visited + frontier) is below this many rows: under it a
+# round's ~115 Janino compiles cost more than interpreting its rows (see
+# "Scale design notes")
+INTERPRET_MAX_ROWS = 1_000_000
+INTERPRETED_CONFS = {
+    "spark.sql.codegen.wholeStage": "false",
+    "spark.sql.codegen.factoryMode": "NO_CODEGEN",
+}
 
 
 @contextmanager
@@ -165,6 +186,8 @@ class Engine:
             )
         with job_label(spark, "init"):  # parquet schema discovery
             self.pages = spark.read.parquet(pages_path)
+            # the scan reads no column, only the files' row-group footers
+            self.pages_rows = self.pages.count()
             self.robots_df = (
                 spark.read.parquet(robots_path) if robots_path else None
             )
@@ -252,6 +275,45 @@ class Engine:
             return F.broadcast
         return lambda d: d.hint("shuffle_hash")
 
+    @contextmanager
+    def _codegen_rule(self):
+        """Run a round or ``finalize`` interpreted (``INTERPRETED_CONFS``)
+        while the crawl is smaller than ``INTERPRET_MAX_ROWS`` rows, under
+        the caller's codegen settings otherwise (and while the frontier
+        size is unknown), restoring the caller's values (or unsetting
+        them) on exit. Session confs are shared by every thread of the
+        session, so the round's pooled write tasks see them too."""
+        small = self.frontier_size is not None and max(
+            self.pages_rows, self.total_visited + self.frontier_size
+        ) < INTERPRET_MAX_ROWS
+        confs = INTERPRETED_CONFS if small else {}
+        conf = self.spark.conf
+        prev = {k: conf.get(k, None) for k in confs}
+        for k, v in confs.items():
+            conf.set(k, v)
+        try:
+            yield
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    conf.unset(k)
+                else:
+                    conf.set(k, v)
+
+    def _compile_counter(self) -> int:
+        """Monotone count of Janino compiles in this JVM (the count of
+        Spark's codegen compilation-time histogram); 0 where the session
+        has no JVM gateway to read it through."""
+        from py4j.protocol import Py4JError
+
+        try:
+            return int(
+                self.spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME().getCount()
+            )
+        except (AttributeError, Py4JError):
+            return 0
+
     def _job_counter(self) -> int:
         """Monotone count of Spark jobs submitted so far — the per-round
         delta is the fixed-floor metric the scaling protocol tracks (each
@@ -265,10 +327,12 @@ class Engine:
 
     def _stage_metrics_local(
         self, r, part_stats, fetch_parts, stats, batch_n, fetched_n,
-        new_total, new_frontier_size, t0,
+        new_total, new_frontier_size, t0, jobs0, compiles0,
     ) -> None:
         """Stage the per-round metrics tables as driver-local pyarrow
-        parquet — O(partitions) rows, zero Spark jobs. Schemas mirror the
+        parquet — O(partitions) rows, zero Spark jobs. ``jobs`` and
+        ``compiles`` count the Spark jobs and Janino compiles since the
+        round's select (``jobs0``, ``compiles0``). Schemas mirror the
         Spark DDL the tables were defined with (int = int32, long = int64)
         so delta scans union cleanly with Spark-written compactions."""
         import pyarrow as pa
@@ -311,6 +375,7 @@ class Engine:
                 ("completed_dropped_n", pa.int64()), ("child_n", pa.int64()),
                 ("img_n", pa.int64()), ("total_visited", pa.int64()),
                 ("frontier_size", pa.int64()), ("wall_s", pa.float64()),
+                ("compiles", pa.int64()), ("jobs", pa.int64()),
             ]
         )
         m_row = {
@@ -324,6 +389,8 @@ class Engine:
                 -1 if new_frontier_size is None else new_frontier_size
             ),
             "wall_s": float(time.monotonic() - t0),
+            "compiles": self._compile_counter() - compiles0,
+            "jobs": self._job_counter() - jobs0,
         }
         self.catalog.append_local(
             "metrics", pa.Table.from_pylist([m_row], schema=m_schema), r
@@ -406,7 +473,10 @@ class Engine:
     def _round(self) -> bool:
         """One round; its jobs are labelled "round <r>: <phase>" for the
         select, pipeline, write and post-commit phases."""
-        with job_label(self.spark, f"round {self.round}: select"):
+        with (
+            job_label(self.spark, f"round {self.round}: select"),
+            self._codegen_rule(),
+        ):
             return self._round_phases()
 
     def _round_phases(self) -> bool:
@@ -422,6 +492,7 @@ class Engine:
             self._debug_log(f"round {r}: frontier empty (driver estimate)")
             return False
         jobs0 = self._job_counter()
+        compiles0 = self._compile_counter()
         ops = self.catalog.read("visited_ops")
         frontier = self._live_frontier(ops)
         if frontier is None:
@@ -866,15 +937,16 @@ class Engine:
         try:
             with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
                 futures = [pool.submit(_labelled, t) for t in tasks]
-                # metrics rows are O(partitions) driver-local data: stage
-                # them as pyarrow parquet with ZERO Spark jobs (a Spark
-                # write job for 40 rows is pure fixed floor)
-                self._stage_metrics_local(
-                    r, part_stats, fetch_parts, stats, batch_n, fetched_n,
-                    new_total, new_frontier_size, t0,
-                )
                 for f in futures:
                     f.result()  # re-raise any failure before commit
+            # metrics rows are O(partitions) driver-local data: stage them
+            # as pyarrow parquet with ZERO Spark jobs (a Spark write job
+            # for 40 rows is pure fixed floor), once the writes' jobs and
+            # compiles are in the counters
+            self._stage_metrics_local(
+                r, part_stats, fetch_parts, stats, batch_n, fetched_n,
+                new_total, new_frontier_size, t0, jobs0, compiles0,
+            )
             self.catalog.commit(
                 r,
                 {
@@ -1056,7 +1128,7 @@ class Engine:
         """Completion propagation (A4, quirks Q4/Q5/Q10): iterative
         bad-call fixpoint over the per-visit edge tree, bounded by crawl
         depth. All joins are O(visited), never O(frontier)."""
-        with job_label(self.spark, "finalize"):
+        with job_label(self.spark, "finalize"), self._codegen_rule():
             self._propagate_completion()
 
     def _propagate_completion(self) -> None:

@@ -20,6 +20,8 @@ recorded per row.
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -106,6 +108,15 @@ def start_warc_ingest(
     )
 
 
+def _last_offset_batch(checkpoint_dir: str) -> int:
+    """The last micro-batch id a streaming checkpoint planned (its
+    ``offsets`` log), or -1 for a fresh checkpoint."""
+    offsets = os.path.join(checkpoint_dir, "offsets")
+    if not os.path.isdir(offsets):
+        return -1
+    return max((int(f) for f in os.listdir(offsets) if f.isdigit()), default=-1)
+
+
 def _start_candidate_ingest(
     spark: SparkSession,
     stream: DataFrame,
@@ -117,6 +128,20 @@ def _start_candidate_ingest(
     batch publishes its rows with the batch id as the high-water mark
     ``ingest_last_batch``; then a long ``candidates`` chain is compacted,
     so a store's read cost grows with its rows, not its batches."""
+    # A fresh checkpoint restarts batch ids at 0, and the replay guard
+    # below would skip every id up to the catalog's high-water mark: each
+    # capture in those batches would be dropped without an error. A
+    # checkpoint may only resume at or past the mark (at the mark when
+    # the last run crashed between its commit and Spark's commit log).
+    mark = int(catalog.extra("ingest_last_batch", -1))
+    if mark >= 0 and _last_offset_batch(checkpoint_dir) < mark:
+        raise ValueError(
+            f"checkpoint {checkpoint_dir} resumes before batch {mark + 1}, "
+            f"but catalog {catalog.root} already holds ingest_last_batch="
+            f"{mark}: its batch ids would restart below the mark and their "
+            "captures would be skipped; resume from the checkpoint that "
+            "wrote the mark or ingest into a fresh catalog"
+        )
     ship_package(spark)
     canon = _canon_udf()
 
@@ -131,7 +156,7 @@ def _start_candidate_ingest(
         # Replay guard: a crash between the commit and Spark's checkpoint
         # write replays the batch id, so ids at or below the high-water
         # mark are skipped. (Ids are monotone within one checkpoint
-        # location; a fresh checkpoint dir requires a fresh catalog.)
+        # location; a checkpoint behind the mark is refused above.)
         if bid <= int(catalog.extra("ingest_last_batch", -1)):
             return
         catalog.append(

@@ -30,6 +30,7 @@ import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # A table whose delta chain holds more than this many deltas is due a
 # compact(): merge-on-read cost then stays flat as rounds accumulate.
@@ -47,6 +48,9 @@ class Catalog:
         # independent tables concurrently, so staging is lock-guarded
         self._pending: list[tuple[str, dict]] = []
         self._lock = threading.Lock()
+        # table -> schema of its first read: later reads pass it to the
+        # reader and skip parquet schema inference, a 1-task Spark job
+        self._schemas: dict[str, StructType] = {}
         # File-output committer v2: tasks move their files into the delta
         # directory at TASK commit instead of the driver renaming every
         # file serially at JOB commit — the driver-serial residue in the
@@ -263,19 +267,24 @@ class Catalog:
         )
         return deltas[start:]
 
-    def _scan(self, chain: list[dict]) -> DataFrame | None:
+    def _scan(self, name: str, chain: list[dict]) -> DataFrame | None:
         if not chain:
             return None
-        return self.spark.read.parquet(
+        reader = self.spark.read
+        if name in self._schemas:
+            reader = reader.schema(self._schemas[name])
+        df = reader.parquet(
             *[os.path.join(self.root, d["path"]) for d in chain]
         )
+        self._schemas.setdefault(name, df.schema)
+        return df
 
     def exists(self, name: str) -> bool:
         return bool(self._chain(name))
 
     def read(self, name: str) -> DataFrame | None:
         """Union of committed deltas (one multi-path parquet scan)."""
-        return self._scan(self._chain(name))
+        return self._scan(name, self._chain(name))
 
     def read_at(self, name: str, rnd: int) -> DataFrame | None:
         """Time travel (Iceberg `VERSION AS OF` analogue): the table as of
@@ -289,7 +298,7 @@ class Catalog:
         its own round and removes the rest, so rounds older than the last
         compaction are no longer reachable — ``None`` is returned, never a
         partial reconstruction."""
-        return self._scan(self._chain(name, rnd))
+        return self._scan(name, self._chain(name, rnd))
 
     def delta_count(self, name: str) -> int:
         return len(self.state["tables"].get(name, {}).get("deltas", []))

@@ -146,6 +146,21 @@ def test_metrics_recorded(tp_engine):
     assert all(r["batch_n"] > 0 for r in rows)
 
 
+def test_metrics_schema(tp_engine):
+    """The persisted per-round metrics row, column by column."""
+    m = tp_engine.catalog.read("metrics")
+    assert [(f.name, f.dataType.simpleString()) for f in m.schema] == [
+        ("round", "int"), ("batch_n", "bigint"), ("fetched_n", "bigint"),
+        ("failed_n", "bigint"), ("cand_n", "bigint"), ("blocked_n", "bigint"),
+        ("completed_dropped_n", "bigint"), ("child_n", "bigint"),
+        ("img_n", "bigint"), ("total_visited", "bigint"),
+        ("frontier_size", "bigint"), ("wall_s", "double"),
+        ("compiles", "bigint"), ("jobs", "bigint"),
+    ]
+    rows = m.collect()
+    assert all(r["jobs"] > 0 and r["compiles"] >= 0 for r in rows)
+
+
 # --- kill-and-resume ---
 
 def test_resume_equals_uninterrupted(spark, fixture_paths, tmp_path, tp_engine, golden_full):

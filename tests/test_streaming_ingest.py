@@ -52,11 +52,49 @@ def test_ingest_replay_guard(spark, tmp_path):
     q = start_page_ingest(spark, pages_dir, cat, str(tmp_path / "ckpt"))
     q.awaitTermination(120)
     n1 = cat.read("candidates").count()
-    assert int(cat.extra("ingest_last_batch", -1)) >= 0
-    # simulate the replay: fresh checkpoint dir -> Spark re-delivers batch 0
-    q2 = start_page_ingest(spark, pages_dir, cat, str(tmp_path / "ckpt2"))
+    mark = int(cat.extra("ingest_last_batch", -1))
+    assert mark >= 0
+    # simulate the crash: drop Spark's commit-log entry for the last batch,
+    # so the restarted query re-delivers it on the same checkpoint
+    commits = tmp_path / "ckpt" / "commits"
+    for f in (commits / str(mark), commits / f".{mark}.crc"):
+        f.unlink(missing_ok=True)
+    q2 = start_page_ingest(spark, pages_dir, cat, str(tmp_path / "ckpt"))
     q2.awaitTermination(120)
+    assert (commits / str(mark)).exists()  # the batch really ran again
     assert cat.read("candidates").count() == n1
+
+
+def test_fresh_checkpoint_on_marked_catalog_raises(spark, tmp_path):
+    """A fresh checkpoint restarts batch ids at 0; on a catalog that
+    already holds ingest_last_batch the replay guard would skip all of its
+    captures, so the ingest refuses to start instead."""
+    data = gen_pages.generate(n_pages=10, seed=7)
+    pages = data["pages"]
+    assert len(pages) == 16
+    pq = dict(index=False, coerce_timestamps="us",
+              allow_truncated_timestamps=True)
+    first, second = str(tmp_path / "in1"), str(tmp_path / "in2")
+    os.makedirs(first)
+    os.makedirs(second)
+    pages[:5].to_parquet(f"{first}/part-0.parquet", **pq)
+    pages[5:].to_parquet(f"{second}/part-0.parquet", **pq)
+    cat = Catalog(str(tmp_path / "cat"), spark)
+    start_page_ingest(
+        spark, first, cat, str(tmp_path / "ck1")
+    ).awaitTermination(120)
+    assert cat.read("candidates").count() == 5
+    mark = int(cat.extra("ingest_last_batch"))
+    fresh = str(tmp_path / "ck2")
+    with pytest.raises(ValueError) as err:
+        start_page_ingest(spark, second, cat, fresh)
+    assert fresh in str(err.value)
+    assert f"ingest_last_batch={mark}" in str(err.value)
+    assert cat.read("candidates").count() == 5
+    # a fresh catalog takes the 11 new captures through that checkpoint
+    cat2 = Catalog(str(tmp_path / "cat2"), spark)
+    start_page_ingest(spark, second, cat2, fresh).awaitTermination(120)
+    assert cat2.read("candidates").count() == 11
 
 
 def test_ingested_candidates_get_crawled(spark, tmp_path):

@@ -168,3 +168,21 @@ def test_refused_commit_publishes_nothing(tmp_path):
     fresh = Catalog(root, None)
     assert fresh.delta_count("a") == 0
     assert [d["round"] for d in fresh.state["tables"]["b"]["deltas"]] == [5]
+
+
+def test_reread_skips_schema_inference(spark, tmp_path):
+    """A table's first read infers its schema (a 1-task Spark job); every
+    later read reuses it, with the same rows, before and after compact."""
+    cat = Catalog(str(tmp_path / "c_schema"), spark)
+    jobs = spark.sparkContext._jsc.sc().dagScheduler()
+    for r in range(3):
+        cat.append("t", df(spark, [(f"k{r}", r)]), r)
+        cat.commit(r)
+    want = sorted(cat.read("t").collect())
+    for _ in range(2):
+        j0 = jobs.nextJobId()
+        again = cat.read("t")
+        assert jobs.nextJobId() == j0
+        assert sorted(again.collect()) == want
+        cat.compact("t", 3)
+    assert cat.delta_count("t") == 1
