@@ -53,10 +53,6 @@ def get_spark(cpus: int) -> SparkSession:
         .config(
             "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2"
         )
-        # rounds past engine.INTERPRET_MAX_ROWS rows compile about 115
-        # classes each, more than the default 100-entry cache holds (a
-        # static conf: it binds at session build)
-        .config("spark.sql.codegen.cache.maxEntries", "4096")
         # 16g, not bigger: giant heaps tripled per-round floors at
         # local[32] on a 32-core box (BENCH/BASELINE.md, historical)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))

@@ -43,9 +43,6 @@ def main() -> None:
             "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
             "2",
         )
-        # rounds past engine.INTERPRET_MAX_ROWS rows compile about 115
-        # classes each, more than the default 100-entry cache holds
-        .config("spark.sql.codegen.cache.maxEntries", "4096")
         .getOrCreate()
     )
     cfg = Config.new(args.config)

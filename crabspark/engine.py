@@ -51,18 +51,17 @@ Scale design notes (10^10 frontier):
   URLs hits over 98% of n buckets (1 - (1 - 1/n)^B), so the rounds that
   hold nearly all the visits scanned every bucket, and it was not faster;
 - every count the loop needs is computed in one aggregate job per round;
-- small rounds are interpreted, not compiled: each round and ``finalize``
-  run with whole-stage codegen off and the expression factories in
-  NO_CODEGEN mode while ``max(pages rows, visited + frontier)`` is below
-  ``INTERPRET_MAX_ROWS``. A round needs about 115 generated classes, more
-  than Spark's 100-entry codegen cache holds, so every round recompiled
-  what the last one compiled (115-135 compiles per round at 6.6-10 ms
-  each on 4 vCPUs). On the 2000-page, 4-round crawl after a prime round
-  this took compiles per crawl from 480-517 to 0-2 and the JVM's CPU
-  time from 44-51 s to 33-41 s, with identical output. At 2M rows
-  interpretation costs +0.2-0.3 s on the fetch join and +0.3-0.55 s on a
-  group-by, so bigger rounds keep codegen (and a session should be built
-  with a ``spark.sql.codegen.cache.maxEntries`` that holds them).
+- rounds are interpreted, not compiled: each round and ``finalize`` run
+  with whole-stage codegen off and the expression factories in NO_CODEGEN
+  mode (``INTERPRETED_CONFS``). A round needs about 115 generated classes,
+  more than Spark's 100-entry codegen cache holds, so every round
+  recompiled what the last one compiled (115-135 compiles per round at
+  6.6-10 ms each on 4 vCPUs). On the 2000-page, 4-round crawl after a
+  prime round this took compiles per crawl from 480-517 to 0-2 and the
+  JVM's CPU time from 44-51 s to 33-41 s, with identical output. Every
+  measured crawl is under 1M rows; past that, interpreting may cost more
+  than compiling (where it does is unmeasured), and a codegen path for
+  big rounds waits for a workload that reaches them.
 
 Resume: the catalog manifest names the last committed round; an interrupted
 round leaves only unreferenced files. An Engine opened over the store reads
@@ -107,11 +106,8 @@ ARROW_MAX_RECORDS_PER_BATCH = 512
 # it fits (<= this many rows), else falls back to a shuffle-hash join (batch
 # side builds) — a 10^8-row batch must never be broadcast
 FETCH_BROADCAST_LIMIT = 1_000_000
-# rounds and finalize run interpreted (INTERPRETED_CONFS) while
-# max(pages rows, visited + frontier) is below this many rows: under it a
-# round's ~115 Janino compiles cost more than interpreting its rows (see
-# "Scale design notes")
-INTERPRET_MAX_ROWS = 1_000_000
+# session confs every round and finalize run under: interpreted, not
+# compiled (see "Scale design notes")
 INTERPRETED_CONFS = {
     "spark.sql.codegen.wholeStage": "false",
     "spark.sql.codegen.factoryMode": "NO_CODEGEN",
@@ -186,8 +182,6 @@ class Engine:
             )
         with job_label(spark, "init"):  # parquet schema discovery
             self.pages = spark.read.parquet(pages_path)
-            # the scan reads no column, only the files' row-group footers
-            self.pages_rows = self.pages.count()
             self.robots_df = (
                 spark.read.parquet(robots_path) if robots_path else None
             )
@@ -276,20 +270,14 @@ class Engine:
         return lambda d: d.hint("shuffle_hash")
 
     @contextmanager
-    def _codegen_rule(self):
-        """Run a round or ``finalize`` interpreted (``INTERPRETED_CONFS``)
-        while the crawl is smaller than ``INTERPRET_MAX_ROWS`` rows, under
-        the caller's codegen settings otherwise (and while the frontier
-        size is unknown), restoring the caller's values (or unsetting
-        them) on exit. Session confs are shared by every thread of the
-        session, so the round's pooled write tasks see them too."""
-        small = self.frontier_size is not None and max(
-            self.pages_rows, self.total_visited + self.frontier_size
-        ) < INTERPRET_MAX_ROWS
-        confs = INTERPRETED_CONFS if small else {}
+    def _interpreted(self):
+        """Run a round or ``finalize`` under ``INTERPRETED_CONFS``,
+        restoring the caller's values (or unsetting them) on exit. Session
+        confs are shared by every thread of the session, so the round's
+        pooled write tasks see them too."""
         conf = self.spark.conf
-        prev = {k: conf.get(k, None) for k in confs}
-        for k, v in confs.items():
+        prev = {k: conf.get(k, None) for k in INTERPRETED_CONFS}
+        for k, v in INTERPRETED_CONFS.items():
             conf.set(k, v)
         try:
             yield
@@ -475,7 +463,7 @@ class Engine:
         select, pipeline, write and post-commit phases."""
         with (
             job_label(self.spark, f"round {self.round}: select"),
-            self._codegen_rule(),
+            self._interpreted(),
         ):
             return self._round_phases()
 
@@ -1128,7 +1116,7 @@ class Engine:
         """Completion propagation (A4, quirks Q4/Q5/Q10): iterative
         bad-call fixpoint over the per-visit edge tree, bounded by crawl
         depth. All joins are O(visited), never O(frontier)."""
-        with job_label(self.spark, "finalize"), self._codegen_rule():
+        with job_label(self.spark, "finalize"), self._interpreted():
             self._propagate_completion()
 
     def _propagate_completion(self) -> None:

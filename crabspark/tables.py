@@ -35,6 +35,8 @@ from pyspark.sql.types import StructType
 # A table whose delta chain holds more than this many deltas is due a
 # compact(): merge-on-read cost then stays flat as rounds accumulate.
 COMPACT_DELTAS = 16
+# footer key under which Spark's parquet writer stores the Spark schema
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 class Catalog:
@@ -48,9 +50,10 @@ class Catalog:
         # independent tables concurrently, so staging is lock-guarded
         self._pending: list[tuple[str, dict]] = []
         self._lock = threading.Lock()
-        # table -> schema of its first read: later reads pass it to the
-        # reader and skip parquet schema inference, a 1-task Spark job
-        self._schemas: dict[str, StructType] = {}
+        # table -> (its newest delta's path, that delta's schema): reads
+        # pass the schema to the reader and skip parquet schema inference,
+        # a 1-task Spark job per read
+        self._schemas: dict[str, tuple[str, StructType]] = {}
         # File-output committer v2: tasks move their files into the delta
         # directory at TASK commit instead of the driver renaming every
         # file serially at JOB commit — the driver-serial residue in the
@@ -270,14 +273,38 @@ class Catalog:
     def _scan(self, name: str, chain: list[dict]) -> DataFrame | None:
         if not chain:
             return None
-        reader = self.spark.read
-        if name in self._schemas:
-            reader = reader.schema(self._schemas[name])
-        df = reader.parquet(
+        # the newest delta holds the writer's current schema: a table that
+        # gained columns reads them from every delta, null where an older
+        # delta lacks them
+        newest = chain[-1]["path"]
+        cached = self._schemas.get(name)
+        if cached is None or cached[0] != newest:
+            cached = self._schemas[name] = (
+                newest, self._written_schema(newest)
+            )
+        reader = self.spark.read.schema(cached[1])
+        return reader.parquet(
             *[os.path.join(self.root, d["path"]) for d in chain]
         )
-        self._schemas.setdefault(name, df.schema)
-        return df
+
+    def _written_schema(self, path: str) -> StructType:
+        """The schema a delta was written with, from the footer of its
+        first data file, read on the driver (no Spark job). A Spark write
+        leaves at least one data file, empty output included. A
+        Spark-written file carries its Spark schema; a pyarrow-written
+        one's Arrow schema is converted."""
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        path = os.path.join(self.root, path)
+        if os.path.isdir(path):
+            first = min(f for f in os.listdir(path) if f.endswith(".parquet"))
+            path = os.path.join(path, first)
+        schema = pq.read_schema(path)
+        spark_json = (schema.metadata or {}).get(SPARK_SCHEMA_KEY)
+        if spark_json is not None:
+            return StructType.fromJson(json.loads(spark_json))
+        return from_arrow_schema(schema)
 
     def exists(self, name: str) -> bool:
         return bool(self._chain(name))

@@ -1,7 +1,7 @@
-"""Small rounds run interpreted: below ``engine.INTERPRET_MAX_ROWS`` rows a
-round and ``finalize`` run without Spark code generation, so a steady
-round compiles (almost) nothing; the crawl output is the oracle's either
-way, and the caller's codegen settings survive ``run()``, even a failed
+"""Crawl rounds run interpreted: each round and ``finalize`` run without
+Spark code generation (``engine.INTERPRETED_CONFS``), so a steady round
+compiles (almost) nothing; the crawl output is the oracle's compiled or
+not, and the caller's codegen settings survive ``run()``, even a failed
 round."""
 
 import pytest
@@ -84,15 +84,17 @@ def crawl(spark, fixture_paths, work, golden):
     return [r["compiles"] for r in m]
 
 
-def test_small_rounds_compile_nothing(spark, fixture_paths, tmp_path, golden):
+def test_rounds_compile_nothing(spark, fixture_paths, tmp_path, golden):
     compiles = crawl(spark, fixture_paths, tmp_path / "w", golden)
     assert all(c <= 5 for c in compiles[1:]), compiles
 
 
-def test_bound_zero_compiles(
+def test_compiled_rounds_match_oracle(
     spark, fixture_paths, tmp_path, golden, monkeypatch
 ):
-    monkeypatch.setattr(engine_mod, "INTERPRET_MAX_ROWS", 0)
+    """Under the caller's codegen (no interpreted confs) the same crawl
+    compiles, and the persisted counts show it."""
+    monkeypatch.setattr(engine_mod, "INTERPRETED_CONFS", {})
     compiles = crawl(spark, fixture_paths, tmp_path / "w", golden)
     assert sum(compiles) > 0, compiles
 

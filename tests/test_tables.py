@@ -170,15 +170,22 @@ def test_refused_commit_publishes_nothing(tmp_path):
     assert [d["round"] for d in fresh.state["tables"]["b"]["deltas"]] == [5]
 
 
-def test_reread_skips_schema_inference(spark, tmp_path):
-    """A table's first read infers its schema (a 1-task Spark job); every
-    later read reuses it, with the same rows, before and after compact."""
+def test_reads_skip_schema_inference(spark, tmp_path):
+    """A read takes the table's schema from its newest delta's footer on
+    the driver, so no read starts a schema-inference job (a 1-task Spark
+    job); every read returns the same rows, before and after compact."""
     cat = Catalog(str(tmp_path / "c_schema"), spark)
     jobs = spark.sparkContext._jsc.sc().dagScheduler()
     for r in range(3):
         cat.append("t", df(spark, [(f"k{r}", r)]), r)
         cat.commit(r)
-    want = sorted(cat.read("t").collect())
+    j0 = jobs.nextJobId()
+    first = cat.read("t")
+    assert jobs.nextJobId() == j0
+    assert first.schema == spark.read.parquet(
+        *[os.path.join(cat.root, d["path"]) for d in cat._chain("t")]
+    ).schema
+    want = sorted(first.collect())
     for _ in range(2):
         j0 = jobs.nextJobId()
         again = cat.read("t")
@@ -186,3 +193,39 @@ def test_reread_skips_schema_inference(spark, tmp_path):
         assert sorted(again.collect()) == want
         cat.compact("t", 3)
     assert cat.delta_count("t") == 1
+
+
+def test_resumed_table_keeps_added_columns(spark, tmp_path):
+    """A store written before a table gained columns, then resumed: reads
+    take the newest delta's schema, so the new rows keep the new columns
+    (null in the old rows), also once a compaction rewrites the chain."""
+    import pyarrow as pa
+
+    root = str(tmp_path / "c_resume")
+    old = Catalog(root, spark)
+    old.append("metrics", df(spark, [("a", 0)], "k string, round int"), 0)
+    old.commit(0)
+    assert old.read("metrics").columns == ["k", "round"]
+    cat = Catalog(root, spark)  # resume
+    assert cat.read("metrics").columns == ["k", "round"]
+    schema = pa.schema([
+        ("k", pa.string()), ("round", pa.int32()),
+        ("compiles", pa.int64()), ("jobs", pa.int64()),
+    ])
+    for r in (1, 2):
+        cat.append_local(
+            "metrics",
+            pa.Table.from_pylist(
+                [{"k": f"n{r}", "round": r, "compiles": r, "jobs": 10 + r}],
+                schema=schema,
+            ),
+            r,
+        )
+        cat.commit(r)
+    want = [("a", 0, None, None), ("n1", 1, 1, 11), ("n2", 2, 2, 12)]
+    rows = cat.read("metrics").orderBy("round").collect()
+    assert [tuple(x) for x in rows] == want
+    cat.compact("metrics", 2)
+    assert cat.delta_count("metrics") == 1
+    rows = Catalog(root, spark).read("metrics").orderBy("round").collect()
+    assert [tuple(x) for x in rows] == want
